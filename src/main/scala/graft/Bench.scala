@@ -217,7 +217,7 @@ object Bench {
       // default): a cached aggregate otherwise keeps all 32
       // post-shuffle partitions forever, and every serve stage over a
       // key-cardinality memo fans into 32 near-empty tasks — measured
-      // round 20 (TaskProfile): 9536 -> 2935 tasks suite-wide, the
+      // round 20 (task census): 9536 -> 2935 tasks suite-wide, the
       // heaviest rows halving (q100 587 -> 24 tasks, q70 -0.6 s).
       // Size-based, so scale-correct by construction: a genuinely
       // large cached table keeps its partitions.

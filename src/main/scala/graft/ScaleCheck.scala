@@ -1,5 +1,6 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
 
 /** Dev harness: sf-scaling sweep over headline queries — the check
@@ -24,6 +25,23 @@ object ScaleCheck {
     "q108_cell_migration", "q109_boilerplate_prefixes", "q110_token_budget",
     "q111_containment", "q112_pipeline_ledger")
   private val sfs = Seq("0.001", "0.01", "0.1")
+  private val mapper = new ObjectMapper()
+
+  /** One `SPARK_GRAFT_SCALECHECK_OUT` line: per-dir min times and
+    * per-decade exponents of one query, seconds rounded to 3 places. */
+  private[graft] def jsonLine(name: String, dirs: Seq[String],
+      times: Seq[Double], exps: Seq[Double], passes: Int,
+      calib: Double): String = {
+    def r3(v: Double) = math.rint(v * 1000) / 1000
+    val o = mapper.createObjectNode().put("query", name)
+    val (ds, ts, es) = (o.putArray("dirs"), o.putArray("sec"),
+      o.putArray("decade_exponents"))
+    dirs.foreach(d => ds.add(d))
+    times.foreach(t => ts.add(r3(t)))
+    exps.foreach(e => es.add(r3(e)))
+    o.put("passes", passes).put("calib_spark", r3(calib))
+    mapper.writeValueAsString(o)
+  }
 
   def main(args: Array[String]): Unit = {
     val names = if (args.nonEmpty) args(0).split(",").toSeq else defaults
@@ -50,7 +68,6 @@ object ScaleCheck {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    def f3(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val sink = outPath.map(p => new java.io.PrintWriter(
       new java.io.FileWriter(p, /* append = */ true)))
     val calib = {
@@ -86,10 +103,7 @@ object ScaleCheck {
         println(s"[scale] $name exponents: " +
           exps.map(e => f"$e%.2f").mkString(", "))
       sink.foreach { w =>
-        val ds = dirs.map(d => "\"" + d + "\"").mkString("[", ",", "]")
-        val ts = times.map(f3).mkString("[", ",", "]")
-        val es = exps.map(f3).mkString("[", ",", "]")
-        w.println(s"""{"query":"$name","dirs":$ds,"sec":$ts,"decade_exponents":$es,"passes":$passes,"calib_spark":${f3(calib)}}""")
+        w.println(jsonLine(name, dirs, times, exps, passes, calib))
         w.flush()
       }
     }

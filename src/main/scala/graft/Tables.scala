@@ -23,8 +23,7 @@ object Tables {
     * into the shared relation during each query's own optimization.
     * Entries for stopped sessions are dropped lazily on lookup.
     */
-  private val readMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, DataFrame)]()
+  private val readMemo = new SessionMemo[DataFrame]
 
   /** A GUARANTEED-unique live-session token for memo keys.
     * `System.identityHashCode` is not collision-free — two live
@@ -46,18 +45,8 @@ object Tables {
       .map(_.invoke(s).asInstanceOf[String])
       .getOrElse(s"idh${System.identityHashCode(s)}")
 
-  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    readMemo.entrySet().removeIf(e => e.getValue._1.sparkContext.isStopped)
-    val key = s"${sessionToken(spark)}:" +
-      s"${spark.sparkContext.applicationId}:$dir:$name"
-    val existing = readMemo.get(key)
-    if (existing != null) existing._2
-    else {
-      val built = (spark, spark.read.parquet(s"$dir/$name.parquet"))
-      val prev = readMemo.putIfAbsent(key, built)
-      if (prev != null) prev._2 else built._2
-    }
-  }
+  def t(spark: SparkSession, dir: String, name: String): DataFrame =
+    readMemo(spark, dir, name)(spark.read.parquet(s"$dir/$name.parquet"))
 
   def lineitem(s: SparkSession, d: String): DataFrame = t(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame   = t(s, d, "orders")
@@ -95,6 +84,35 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame = t(s, d, "embeddings")
 }
 
+/** The one session-scoped memo behind [[Tables.t]], [[CachedPlans.of]]
+  * and [[CachedPlans.valueOf]]: keyed by (session token, application
+  * id, dir, tag); entries of stopped sessions are dropped lazily on
+  * each lookup.
+  *
+  * Get-then-putIfAbsent instead of computeIfAbsent: builders nest
+  * (the shingle index builds on the cached token table), and a nested
+  * computeIfAbsent on one ConcurrentHashMap is a recursive update.
+  * The race (two threads building the same value) is benign: the
+  * first value stored wins and the loser's is dropped.
+  */
+private[graft] final class SessionMemo[V] {
+  private val entries =
+    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, V)]()
+
+  def apply(s: SparkSession, dir: String, tag: String)(build: => V): V = {
+    entries.entrySet().removeIf(e => e.getValue._1.sparkContext.isStopped)
+    val key =
+      s"${Tables.sessionToken(s)}:${s.sparkContext.applicationId}:$dir:$tag"
+    val existing = entries.get(key)
+    if (existing != null) existing._2
+    else {
+      val built = (s, build)
+      val prev = entries.putIfAbsent(key, built)
+      if (prev != null) prev._2 else built._2
+    }
+  }
+}
+
 /** Memoized cached plans. Query modules cache shared sub-plans
   * (shingle index, MinHash signatures, quantized vectors) because each
   * is referenced 2-3x by self-joins; caching anew on EVERY query
@@ -106,28 +124,14 @@ object Tables {
   * are dropped lazily on the next lookup.
   */
 object CachedPlans {
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, DataFrame)]()
+  private val memo = new SessionMemo[DataFrame]
 
-  def of(s: SparkSession, dir: String, tag: String)(build: => DataFrame): DataFrame = {
-    memo.entrySet().removeIf(e => e.getValue._1.sparkContext.isStopped)
-    val key =
-      s"${Tables.sessionToken(s)}:${s.sparkContext.applicationId}:$dir:$tag"
-    // get-then-putIfAbsent instead of computeIfAbsent: builders nest
-    // (the shingle index builds on the cached token table), and a
-    // nested computeIfAbsent on one ConcurrentHashMap is a recursive
-    // update. The race (two threads building the same plan) is benign:
-    // CacheManager keys cached data by canonicalized plan, so the
-    // loser's cache() resolves to the winner's entry (no leaked
-    // second copy).
-    val existing = memo.get(key)
-    if (existing != null) existing._2
-    else {
-      val built = (s, build.cache())
-      val prev = memo.putIfAbsent(key, built)
-      if (prev != null) prev._2 else built._2
-    }
-  }
+  /** A build race (see [[SessionMemo]]) leaks nothing here:
+    * CacheManager keys cached data by canonicalized plan, so the
+    * loser's cache() resolves to the winner's entry.
+    */
+  def of(s: SparkSession, dir: String, tag: String)(build: => DataFrame): DataFrame =
+    memo(s, dir, tag)(build.cache())
 
   /** Cap on [[layout]]'s derived partition count — matches the
     * Components loop's bound; a memo near this size should be
@@ -216,7 +220,7 @@ object CachedPlans {
   }
 
   /** Unique memory-sink name for a stream==batch gate builder. The
-    * putIfAbsent race above intentionally tolerates duplicate
+    * [[SessionMemo]] putIfAbsent race intentionally tolerates duplicate
     * concurrent builder runs — but two builders racing the SAME
     * gated query would collide on a fixed `.queryName` and throw
     * (active streaming query names must be unique per session). A
@@ -235,21 +239,10 @@ object CachedPlans {
     * ACTION (collect/head), which `of` cannot absorb: without this,
     * every serve pays the build job's dispatch latency again.
     */
-  private val valueMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, Any)]()
+  private val valueMemo = new SessionMemo[Any]
 
-  def valueOf[T](s: SparkSession, dir: String, tag: String)(build: => T): T = {
-    valueMemo.entrySet().removeIf(e => e.getValue._1.sparkContext.isStopped)
-    val key =
-      s"${Tables.sessionToken(s)}:${s.sparkContext.applicationId}:$dir:$tag"
-    val existing = valueMemo.get(key)
-    if (existing != null) existing._2.asInstanceOf[T]
-    else {
-      val built = (s, build: Any)
-      val prev = valueMemo.putIfAbsent(key, built)
-      (if (prev != null) prev._2 else built._2).asInstanceOf[T]
-    }
-  }
+  def valueOf[T](s: SparkSession, dir: String, tag: String)(build: => T): T =
+    valueMemo(s, dir, tag)(build).asInstanceOf[T]
 }
 
 /** ORDER-INDEPENDENT exact summation of per-row bit-identical DOUBLE

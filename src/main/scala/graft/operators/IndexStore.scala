@@ -1051,9 +1051,11 @@ object IndexStore {
     * immutable and each version's ids are unique (the store's
     * invariant: save/append land distinct vectors, delete removes,
     * compact preserves), so an id is added iff it is in an
-    * added-but-no-removed file and vice versa. Two anti-joins over
-    * O(change) rows — diffing a week of maintenance on a 100 TB
-    * index reads the week's churn, never the index.
+    * added-but-no-removed file and vice versa; an id that breaks the
+    * invariant in the changed files fails the diff with an error
+    * naming it. One aggregate over O(change) rows — diffing a week
+    * of maintenance on a 100 TB index reads the week's churn, never
+    * the index.
     */
   def diff(s: SparkSession, out: String, v1: Long, v2: Long,
       idCol: String = "vec_id"): DataFrame = {
@@ -1091,7 +1093,9 @@ object IndexStore {
     // groupBy(id) classifies every id in a single exchange: net +1 =
     // added (in v2's added files only), net -1 = removed, net 0 = in
     // both (rewritten file, e.g. compact) — exactly the pair the
-    // anti-joins excluded.
+    // anti-joins excluded. Any other net means an id repeated within
+    // one version (append does not check uniqueness), which no
+    // classification can report truthfully: fail loudly instead.
     val codeRows = cA.select(col(idCol), col("cell"), lit(1L).as("tag"))
       .unionByName(cR.select(col(idCol), col("cell"), lit(-1L).as("tag")))
       .groupBy(col(idCol))
@@ -1100,7 +1104,12 @@ object IndexStore {
         max(when(col("tag") === -1L, col("cell"))).as("cell_r"))
       .filter(col("net") =!= 0L)
       .select(
-        when(col("net") === 1L, col("cell_a")).otherwise(col("cell_r"))
+        when(abs(col("net")) > 1L, raise_error(concat(
+            lit(s"IndexStore.diff($v1, $v2): $idCol "),
+            col(idCol).cast("string"), lit(" has net change "),
+            col("net").cast("string"),
+            lit(" across the changed files; ids must be unique within a version"))))
+          .when(col("net") === 1L, col("cell_a")).otherwise(col("cell_r"))
           .as("cell"),
         when(col("net") === 1L, lit(1L)).otherwise(lit(0L))
           .as("codes_added"),

@@ -220,7 +220,7 @@ object Ivf {
   /** TWO-LEVEL (hierarchical) nearest-centroid assignment — the scale
     * fix for [[assign]]'s O(n·k) per-row distance fan-out, which
     * dominates SemDeDup-class audits once k grows with the corpus
-    * (the round-16 SemScaleProbe finding: assignment-dominated at
+    * (BASELINE.md SCALING, round 16: assignment-dominated at
     * n=200k, k=800). Route each vector to its `probeSuper` nearest
     * of g = ⌈√k⌉ supercenters ([[superCluster]] on the model,
     * driver-side), then argmin only over those supers' member

@@ -1956,27 +1956,6 @@ object Dedup extends QueryModule {
         .select("doc_a", "doc_b")
     }
 
-  /** Dev probe hook (graft.LshTruthProbe): the q210 truth component
-    * standalone — parity-partitioned or full-universe — bypassing the
-    * memo, so the 10×-corpus cost of the f² truth join itself can be
-    * recorded (BASELINE.md SCALING).
-    */
-  def truthJoinCount(s: SparkSession, dir: String, parity: Boolean): Long = {
-    val sh = shingled(s, dir)
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val cond0 = col("a.hs") === col("b.hs") && col("a.doc_id") < col("b.doc_id")
-    val cond =
-      if (parity) cond0 && col("a.doc_id") % 2 === col("b.doc_id") % 2
-      else cond0
-    sh.as("a").join(sh.as("b"), cond)
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("inter"))
-      .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sz_a")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("sz_b")), "doc_b")
-      .filter(expr("3 * inter >= sz_a + sz_b"))
-      .count()
-  }
-
   private def q210(s: SparkSession, dir: String): DataFrame = {
     // The whole sweep is memoized: a b×r tuning pass is a one-time
     // artifact (you run it once per corpus, then commit to a

@@ -572,10 +572,10 @@ object SimSearch extends QueryModule {
   // integer-component dots/norms are exact in float64, so the τ cut,
   // the argmax, and the tie-break are engine-stable (q91's rationale).
   //
-  // TWO-LEVEL ASSIGNMENT CERTIFICATION (round 17, the round-16
-  // SemScaleProbe ask): once k grows with the corpus, the flat
-  // nearest-centroid step itself is the O(n·k) bottleneck — the fix
-  // is Ivf.assignHierarchical (route to probe-2 of g = √k
+  // TWO-LEVEL ASSIGNMENT CERTIFICATION (round 17, answering the
+  // round-16 BASELINE.md SCALING rows): once k grows with the corpus,
+  // the flat nearest-centroid step itself is the O(n·k) bottleneck —
+  // the fix is Ivf.assignHierarchical (route to probe-2 of g = √k
   // supercenters, then argmin within: O(n·√k)). The hierarchy is
   // approximate by construction, so the gate is RECALL-GATED under
   // the oracle hash: this row's output carries (hier_total,
@@ -586,9 +586,9 @@ object SimSearch extends QueryModule {
   // assignments from the same parquet, so any divergence in routing,
   // tie-breaks (always (distance, id) — exact integer distances), or
   // the agreement count flips the hash. The measured agreement is a
-  // pinned corpus property, not a tunable; SemScaleProbe carries the
-  // wall-clock side of the same story (assignment cost bent from
-  // O(n·k) to O(n·√k)).
+  // pinned corpus property, not a tunable; BASELINE.md SCALING
+  // records the wall-clock side of the same story (assignment cost
+  // bent from O(n·k) to O(n·√k)).
   private def q211(s: SparkSession, dir: String): DataFrame = {
     // Scored eval×train pairs are memoized: a decontamination audit
     // runs once per release over a frozen eval set, so the cell

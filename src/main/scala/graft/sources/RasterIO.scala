@@ -124,37 +124,13 @@ object RasterIO {
       }
     }
   }
-
-  /** Default chip serializer: header (w, h, bounds, nodata) + pixels,
-    * all little-endian doubles — a placeholder for a GTiff encoder
-    * with the same signature.
-    */
-  def encodeRaw(c: Chip): Array[Byte] = {
-    val buf = java.nio.ByteBuffer.allocate((7 + c.px.length) * 8)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    buf.putDouble(c.width.toDouble).putDouble(c.height.toDouble)
-      .putDouble(c.minx).putDouble(c.miny).putDouble(c.maxx).putDouble(c.maxy)
-      .putDouble(c.nodata)
-    c.px.foreach(buf.putDouble)
-    buf.array()
-  }
-
-  def decodeRaw(bytes: Array[Byte]): Chip = {
-    val buf = java.nio.ByteBuffer.wrap(bytes)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val w = buf.getDouble.toInt; val h = buf.getDouble.toInt
-    val (x1, y1, x2, y2) = (buf.getDouble, buf.getDouble, buf.getDouble, buf.getDouble)
-    val nodata = buf.getDouble
-    val px = Array.fill(w * h)(buf.getDouble)
-    Chip(w, h, x1, y1, x2, y2, nodata, px)
-  }
 }
 
 /** S6 — the download stage's control logic, extracted pure so it is
   * unit-testable without a network: OAuth token lifecycle (mint or
   * refresh after 600 s — `code/imagery_store.py:149-156`), manual
   * redirect following (`:96-105`, `:135-141`), and the 4-connection
-  * quota cap (`README.md:66`) as a task-level semaphore. The actual
+  * quota cap (`README.md:66`) as a task-level fixed pool. The actual
   * byte transport is a pluggable function; on a cluster this runs
   * inside `foreachPartition` with one token clock per executor.
   */
@@ -189,23 +165,22 @@ object Download {
     }
 
   /** Fetch a partition's URLs with at most `maxConcurrent` in flight
-    * (the provider quota). Returns (url, bytes) pairs; per-item
-    * failures are logged and skipped (reference's log-and-continue).
+    * (the provider quota: the pool's thread count is the bound).
+    * Returns (url, bytes) pairs; per-item failures are logged and
+    * skipped (reference's log-and-continue).
     */
   def fetchPartition(urls: Seq[String], fetch: String => Array[Byte],
       maxConcurrent: Int = 4): Seq[(String, Array[Byte])] = {
-    val sem = new java.util.concurrent.Semaphore(maxConcurrent)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(maxConcurrent)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
     try {
       val futures = urls.map { u =>
         scala.concurrent.Future {
-          sem.acquire()
           try Some(u -> fetch(u))
           catch { case e: Exception =>
             System.err.println(s"[graft] fetch $u failed: ${e.getMessage}"); None
-          } finally sem.release()
+          }
         }
       }
       scala.concurrent.Await.result(

@@ -617,6 +617,21 @@ class IndexStoreSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
+  test("diff fails loudly on an id repeated within one version") {
+    val (encoded, _, _, out) = freshIndex("graft-index-diff-dup")
+    val id = encoded.select("vec_id").limit(1).collect().head.getLong(0)
+    val row = encoded.filter(col("vec_id") === id)
+    // append does not check id uniqueness: v2 holds `id` three times
+    IndexStore.append(row.unionByName(row), out)
+    val e = intercept[Exception] {
+      IndexStore.diff(spark, out, 1L, 2L).collect()
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(m => m.contains(s"vec_id $id has net change 2")),
+      msgs.mkString(" | "))
+  }
+
   test("restore rolls the head back to a retained version — a pure " +
       "metadata commit that survives vacuum and restores the model " +
       "across a retrain") {

@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * count forever, and every light serve over it fans into near-empty
   * tasks (q153 was a REAL such regression, flagged by the r19 gate
   * and diagnosed only after a round of noisy-host adjudication).
-  * TaskProfile/StageProbe are dev tools; this spec is the CI guard:
+  * The benchmark's traced run reports the same counts suite-wide
+  * (`spark.jobs` / `.stages` / `.tasks`); this spec is the CI guard:
   * it runs the light-presentation serves warm under the shared test
   * session and asserts their job/stage/task counts stay at their
   * pinned budgets.
