@@ -84,10 +84,14 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame = t(s, d, "embeddings")
 }
 
-/** The one session-scoped memo behind [[Tables.t]], [[CachedPlans.of]]
-  * and [[CachedPlans.valueOf]]: keyed by (session token, application
-  * id, dir, tag); entries of stopped sessions are dropped lazily on
-  * each lookup.
+/** The one session-scoped memo for driver-side state: keyed by
+  * (session token, application id, dir, tag); entries of stopped
+  * sessions are dropped lazily on each lookup. Its users are
+  * [[Tables.t]] (resolved table reads), [[CachedPlans.of]] (cached
+  * sub-plans), [[CachedPlans.valueOf]] (driver values: trained models,
+  * certified pairs, on-disk index paths of the query modules) and
+  * `operators.IndexStore` (version-pinned reads, dropped per index
+  * path by `vacuum` through [[dropDir]]).
   *
   * Get-then-putIfAbsent instead of computeIfAbsent: builders nest
   * (the shingle index builds on the cached token table), and a nested
@@ -96,13 +100,15 @@ object Tables {
   * first value stored wins and the loser's is dropped.
   */
 private[graft] final class SessionMemo[V] {
-  private val entries =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, V)]()
+  private val entries = new java.util.concurrent.ConcurrentHashMap[
+    (String, String, String, String), (SparkSession, V)]()
+
+  /** Drop every session's entries for `dir` (other dirs untouched). */
+  def dropDir(dir: String): Unit = entries.keySet().removeIf(_._3 == dir)
 
   def apply(s: SparkSession, dir: String, tag: String)(build: => V): V = {
     entries.entrySet().removeIf(e => e.getValue._1.sparkContext.isStopped)
-    val key =
-      s"${Tables.sessionToken(s)}:${s.sparkContext.applicationId}:$dir:$tag"
+    val key = (Tables.sessionToken(s), s.sparkContext.applicationId, dir, tag)
     val existing = entries.get(key)
     if (existing != null) existing._2
     else {

@@ -619,52 +619,28 @@ object IndexStore {
     else s.read.option("basePath", codesRoot(out))
       .parquet(files.map(f => s"${codesRoot(out)}/${f.path}"): _*)
 
-  /** Version-pinned resolved reads memoized per (session, out,
-    * version) — Tables.t's footer-resolution memo applied to the
-    * store: a committed version's file list is IMMUTABLE, so the
-    * analyzed relation can be shared across queries (a serve fleet
-    * re-reads the same pinned version hundreds of times; re-resolving
-    * parquet footers on every read is a measured ~80 ms tax —
-    * q131's round-16 drift). [[vacuum]] is the only operation that
-    * deletes files belonging to committed versions, so it drops this
-    * store's entries for its path; every other lifecycle op commits a
-    * NEW version and therefore a new key. Entries for stopped
-    * sessions are dropped lazily on lookup.
+  /** Resolved reads of immutable file SETS memoized per (session,
+    * out, key) — Tables.t's footer-resolution memo applied to the
+    * store. Two kinds of key: a committed version (its file list is
+    * IMMUTABLE, and a serve fleet re-reads the same pinned version
+    * hundreds of times) and [[diff]]'s changed-file reads
+    * ("diff±:v1:v2", immutable once both versions are committed).
+    * Re-resolving parquet footers costs a measured ~80 ms Spark job
+    * per call even warm (q131's round-16 drift). Round 21: diff used
+    * to call readFiles directly, so every q132-style audit serve
+    * re-resolved four footer sets — the bulk of its 0.48 s pin and
+    * exactly the dispatch-latency class the degraded-host gate kept
+    * flagging (VERDICT r20 next-round #4). [[vacuum]] is the only
+    * operation that deletes files belonging to committed versions, so
+    * it drops this store's entries for its path; every other
+    * lifecycle op commits a NEW version and therefore a new key.
+    * Entries for stopped sessions are dropped lazily on lookup.
     */
-  private val versionReadMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String), (SparkSession, DataFrame)]()
+  private val readMemo = new graft.SessionMemo[DataFrame]
 
   private def readVersion(s: SparkSession, out: String, version: Long,
       schema: StructType, files: Seq[FileEntry]): DataFrame =
-    readMemoized(s, out, version.toString, schema, files)
-
-  /** Memoized [[readFiles]] under an arbitrary immutable key — shared
-    * by the version-pinned reads (key = version) and [[diff]]'s
-    * changed-file reads (key = "diff±:v1:v2"): both read file SETS
-    * that are immutable once the versions are committed, so the
-    * resolved relation (the parquet footer resolution — a measured
-    * ~80 ms Spark job per call even warm) is paid once per session.
-    * Round 21: diff used to call readFiles directly, so every
-    * q132-style audit serve re-resolved four footer sets — the bulk
-    * of its 0.48 s pin and exactly the dispatch-latency class the
-    * degraded-host gate kept flagging (VERDICT r20 next-round #4).
-    */
-  private def readMemoized(s: SparkSession, out: String, key: String,
-      schema: StructType, files: Seq[FileEntry]): DataFrame = {
-    versionReadMemo.entrySet()
-      .removeIf(e => e.getValue._1.sparkContext.isStopped)
-    val k = (graft.Tables.sessionToken(s), out, key)
-    val existing = versionReadMemo.get(k)
-    if (existing != null) existing._2
-    else {
-      val built = (s, readFiles(s, out, schema, files))
-      val prev = versionReadMemo.putIfAbsent(k, built)
-      if (prev != null) prev._2 else built._2
-    }
-  }
-
-  private def dropVersionMemo(out: String): Unit =
-    versionReadMemo.keySet().removeIf(_._2 == out)
+    readMemo(s, out, version.toString)(readFiles(s, out, schema, files))
 
   // ----------------------------------------------------------------
   // public lifecycle
@@ -878,7 +854,7 @@ object IndexStore {
     // vacuum is the one operation that deletes files of committed
     // versions — memoized resolved reads for this path must not
     // outlive them
-    dropVersionMemo(out)
+    readMemo.dropDir(out)
     val (fs, root) = hfs(s, codesRoot(out))
     val cutoff = System.currentTimeMillis() - minAgeMs
     // minAgeMs == 0 means "no pin window": everything unreferenced is
@@ -1072,10 +1048,12 @@ object IndexStore {
     // changed-file reads are memoized like version-pinned reads: the
     // two file subsets are immutable once v1/v2 are committed, and an
     // audit serve must not pay 2 fresh footer resolutions per diff
-    val cA = readMemoized(s, out, s"diff+:$v1:$v2", m2.schema,
-      m2.files.filter(f => addedPaths(f.path))).select(col(idCol), col("cell"))
-    val cR = readMemoized(s, out, s"diff-:$v1:$v2", m1.schema,
-      m1.files.filter(f => removedPaths(f.path))).select(col(idCol), col("cell"))
+    val cA = readMemo(s, out, s"diff+:$v1:$v2")(readFiles(s, out,
+      m2.schema, m2.files.filter(f => addedPaths(f.path))))
+      .select(col(idCol), col("cell"))
+    val cR = readMemo(s, out, s"diff-:$v1:$v2")(readFiles(s, out,
+      m1.schema, m1.files.filter(f => removedPaths(f.path))))
+      .select(col(idCol), col("cell"))
     // ONE union + aggregate instead of the old per-measure aggregates
     // stitched with three full_outer joins: semantically identical
     // (a cell appears iff anything changed; absent measures sum to

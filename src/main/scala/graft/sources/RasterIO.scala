@@ -103,11 +103,14 @@ object RasterIO {
     * `code/tx.py:92-96` — including its log-and-continue error
     * handling). The default codec is the real GeoTIFF encoder
     * ([[GeoTiff.encode]], EPSG:4326 like `code/tx.py:57`); pass a
-    * custom `encode` for other profiles.
+    * custom `encode` for other profiles. Returns the number of chips
+    * not copied (summed over tasks by an accumulator): a failed chip
+    * is still logged and skipped, never a job failure.
     */
   def writeChips(chips: Dataset[(String, Chip)], featureDir: String,
-      encode: Chip => Array[Byte] = GeoTiff.encode(_)): Unit = {
+      encode: Chip => Array[Byte] = GeoTiff.encode(_)): Long = {
     val dir = featureDir
+    val failed = chips.sparkSession.sparkContext.longAccumulator
     chips.foreachPartition { it: Iterator[(String, Chip)] =>
       val tmp = Files.createTempDirectory("graft-chips")
       Files.createDirectories(Paths.get(dir))
@@ -120,9 +123,11 @@ object RasterIO {
         } catch { case e: Exception =>
           // reference semantics: log, don't fail the job (tx.py:94-96)
           System.err.println(s"[graft] chip $uuid not copied: ${e.getMessage}")
+          failed.add(1L)
         }
       }
     }
+    failed.sum
   }
 }
 

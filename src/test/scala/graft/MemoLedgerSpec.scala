@@ -12,9 +12,11 @@ import scala.jdk.CollectionConverters._
   * ONE reviewable artifact instead of scattered comments. The spec
   * fails on: a source tag missing from the ledger (an undeclared
   * memo), a ledger row with no surviving call site (a stale entry),
-  * a class outside the taxonomy, or a call site whose tag the
+  * a class outside the taxonomy, a call site whose tag the
   * extractor cannot read (a computed tag would otherwise escape the
-  * ledger silently).
+  * ledger silently), a cited file without that tag, or a hand-rolled
+  * memo map in a query module or operator (it would bypass the
+  * ledger and [[SessionMemo]]'s key and eviction rule).
   */
 class MemoLedgerSpec extends AnyFunSuite {
 
@@ -29,32 +31,38 @@ class MemoLedgerSpec extends AnyFunSuite {
     """CachedPlans\.(of|valueOf)\(\s*[^,()]+,\s*[^,()]+,\s*(s?)"([^"]*)"""".r
   private val anyCallRe = """CachedPlans\.(of|valueOf)\(""".r
 
-  private def sourceTags: (Set[String], Int, Int) = {
-    val files = Files.walk(Paths.get("src/main/scala")).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala")).toSeq
-    var extracted = 0
-    var total = 0
-    val tags = Set.newBuilder[String]
-    files.foreach { p =>
-      val text = new String(Files.readAllBytes(p), "UTF-8")
-      total += anyCallRe.findAllIn(text).size
-      callRe.findAllMatchIn(text).foreach { m =>
-        extracted += 1
-        val raw = m.group(3)
-        val tag =
+  /** Per source file under src/main/scala (keyed by its path relative
+    * to src/main/scala/graft, as MEMOS.md cites it; files outside
+    * graft/ get a `../` key): its extracted tags, extracted-call count
+    * and total call count. */
+  private lazy val fileTags: Map[String, (Set[String], Int, Int)] = {
+    val root = Paths.get("src/main/scala/graft")
+    Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala")).map { p =>
+        val text = new String(Files.readAllBytes(p), "UTF-8")
+        val tags = callRe.findAllMatchIn(text).map { m =>
+          val raw = m.group(3)
           if (m.group(2) == "s" && raw.contains("$"))
             raw.replaceAll("""\$\{?[A-Za-z0-9_]+\}?""", "*")
           else raw
-        tags += tag
-      }
-    }
-    (tags.result(), extracted, total)
+        }.toSeq
+        root.relativize(p).toString ->
+          (tags.toSet, tags.size, anyCallRe.findAllIn(text).size)
+      }.toMap
+  }
+
+  private def sourceTags: (Set[String], Int, Int) = {
+    val all = fileTags.values
+    (all.flatMap(_._1).toSet, all.map(_._2).sum, all.map(_._3).sum)
   }
 
   private val layouts = Set("narrow-driver", "narrow-pair",
     "wide-parallel", "natural")
 
-  private def ledgerRows: Seq[(String, String, String, String)] = {
+  private case class LedgerRow(tag: String, klass: String, sites: String,
+      just: String, layout: String)
+
+  private def ledgerRows: Seq[LedgerRow] = {
     val lines = Files.readAllLines(Paths.get("MEMOS.md")).asScala
     val start = lines.indexWhere(_.startsWith("| tag |"))
     assert(start >= 0, "MEMOS.md ledger table header not found")
@@ -63,9 +71,10 @@ class MemoLedgerSpec extends AnyFunSuite {
       // cells(0) is the empty prefix before the leading pipe
       val tag = cells(1).stripPrefix("`").stripSuffix("`")
       val klass = cells(3)
+      val sites = if (cells.length > 4) cells(4) else ""
       val just = if (cells.length > 5) cells(5) else ""
       val layout = if (cells.length > 6) cells(6) else ""
-      (tag, klass, just, layout)
+      LedgerRow(tag, klass, sites, just, layout)
     }
   }
 
@@ -79,7 +88,7 @@ class MemoLedgerSpec extends AnyFunSuite {
 
   test("every source tag is declared in MEMOS.md") {
     val (src, _, _) = sourceTags
-    val declared = ledgerRows.map(_._1).toSet
+    val declared = ledgerRows.map(_.tag).toSet
     val undeclared = src -- declared
     assert(undeclared.isEmpty,
       s"memo tags with no MEMOS.md row (declare class + serve work): " +
@@ -88,21 +97,59 @@ class MemoLedgerSpec extends AnyFunSuite {
 
   test("every MEMOS.md row has a surviving call site") {
     val (src, _, _) = sourceTags
-    val stale = ledgerRows.map(_._1).toSet -- src
+    val stale = ledgerRows.map(_.tag).toSet -- src
     assert(stale.isEmpty,
       s"MEMOS.md rows with no call site left in src/main (delete them): " +
         stale.toSeq.sorted.mkString(", "))
   }
 
+  test("every file a MEMOS.md row cites holds a CachedPlans call " +
+      "with that row's tag") {
+    val citeRe = """`([\w/]+\.scala)(:[\d-]+)?`""".r
+    val bad = ledgerRows.flatMap { r =>
+      citeRe.findAllMatchIn(r.sites).toSeq.flatMap { m =>
+        val f = m.group(1)
+        if (m.group(2) != null)
+          Some(s"${r.tag}: cites a line (`$f${m.group(2)}`); cite the file")
+        else if (!fileTags.get(f).exists(_._1(r.tag)))
+          Some(s"${r.tag}: `$f` has no CachedPlans call with this tag")
+        else None
+      }
+    }
+    assert(bad.isEmpty, bad.mkString("; "))
+    assert(ledgerRows.forall(r => citeRe.findFirstIn(r.sites).nonEmpty),
+      "rows citing no source file: " + ledgerRows
+        .filter(r => citeRe.findFirstIn(r.sites).isEmpty).map(_.tag)
+        .mkString(", "))
+  }
+
+  test("no hand-rolled memo maps in query modules or operators") {
+    // driver-side state in queries/ and operators/ is memoized through
+    // SessionMemo (CachedPlans.of/valueOf, IndexStore's read memo):
+    // one key (session, app, dir, tag), one eviction rule, one ledger
+    val handRe = """ConcurrentHashMap|computeIfAbsent|TrieMap""".r
+    val hits = Seq("queries", "operators").flatMap { d =>
+      Files.walk(Paths.get(s"src/main/scala/graft/$d")).iterator().asScala
+        .filter(p => p.toString.endsWith(".scala")).toSeq.flatMap { p =>
+          Files.readAllLines(p).asScala.zipWithIndex.collect {
+            case (l, i) if handRe.findFirstIn(l).nonEmpty =>
+              s"$p:${i + 1}"
+          }
+        }
+    }
+    assert(hits.isEmpty, s"${hits.size} hand-rolled memo lines (use " +
+      s"CachedPlans.valueOf or a SessionMemo): ${hits.mkString(", ")}")
+  }
+
   test("every MEMOS.md row's class is in the taxonomy") {
-    val bad = ledgerRows.filterNot { case (_, k, _, _) => classes(k) }
+    val bad = ledgerRows.filterNot(r => classes(r.klass))
     assert(bad.isEmpty,
       s"rows with a class outside the documented taxonomy: " +
-        bad.map { case (t, k, _, _) => s"$t -> $k" }.mkString(", "))
+        bad.map(r => s"${r.tag} -> ${r.klass}").mkString(", "))
   }
 
   test("no duplicate ledger rows") {
-    val dup = ledgerRows.groupBy(_._1).filter(_._2.size > 1).keys
+    val dup = ledgerRows.groupBy(_.tag).filter(_._2.size > 1).keys
     assert(dup.isEmpty, s"duplicate MEMOS.md rows: ${dup.mkString(", ")}")
   }
 
@@ -111,10 +158,10 @@ class MemoLedgerSpec extends AnyFunSuite {
     // the serve-cost contract — a cached plan keeps its build-time
     // partitioning forever, so the governance must be declared, not
     // scattered in comments.
-    val bad = ledgerRows.filterNot { case (_, _, _, lay) => layouts(lay) }
+    val bad = ledgerRows.filterNot(r => layouts(r.layout))
     assert(bad.isEmpty,
       s"rows missing a layout column value from ${layouts.toSeq.sorted.mkString("/")}: " +
-        bad.map { case (t, _, _, l) => s"$t -> '$l'" }.mkString(", "))
+        bad.map(r => s"${r.tag} -> '${r.layout}'").mkString(", "))
   }
 
   test("every report-class row carries a per-query justification " +
@@ -127,19 +174,17 @@ class MemoLedgerSpec extends AnyFunSuite {
     // Enforced shape: the justification names a qNN_ query and is
     // unique across report rows (22 identical sentences justify
     // nothing).
-    val reports = ledgerRows.filter(_._2 == "report")
+    val reports = ledgerRows.filter(_.klass == "report")
     assert(reports.nonEmpty)
     val qRe = """q\d+_\w+""".r
-    val unnamed = reports.filter { case (_, _, j, _) =>
-      qRe.findFirstIn(j).isEmpty
-    }
+    val unnamed = reports.filter(r => qRe.findFirstIn(r.just).isEmpty)
     assert(unnamed.isEmpty,
       "report rows whose justification does not name the owning query: " +
-        unnamed.map(_._1).mkString(", "))
-    val dup = reports.groupBy(_._3).filter(_._2.size > 1).values
+        unnamed.map(_.tag).mkString(", "))
+    val dup = reports.groupBy(_.just).filter(_._2.size > 1).values
     assert(dup.isEmpty,
       "report rows sharing a copy-paste justification: " +
-        dup.map(_.map(_._1).mkString("/")).mkString("; "))
+        dup.map(_.map(_.tag).mkString("/")).mkString("; "))
   }
 
   test("no bare partition-count literals in query modules outside writes") {

@@ -38,6 +38,22 @@ class RasterIOSpec extends AnyFunSuite with SharedSpark {
     assert(back == chip.copy(px = back.px) && back.px.toSeq == Seq(1.5, 2.5))
   }
 
+  test("S7/S8: a chip whose encode fails is counted and skipped, " +
+      "the others still land") {
+    implicit val s = spark
+    import s.implicits._
+    val out = Files.createTempDirectory("graft-store").toString
+    val ok = Chip(2, 1, 0, 0, 2, 1, 0.0, Array(1.5, 2.5))
+    val bad = ok.copy(nodata = -1.0)
+    val failed = RasterIO.writeChips(
+      Seq(("u-ok", ok), ("u-bad", bad)).toDS().repartition(2), out,
+      encode = c =>
+        if (c.nodata == -1.0) throw new java.io.IOException("disk full")
+        else graft.sources.GeoTiff.encode(c))
+    assert(failed == 1L)
+    assert(new java.io.File(out).list().toSeq == Seq("u-ok.tif"))
+  }
+
   test("S7: GeoTIFF encode/decode round-trips bit-exactly with georeferencing") {
     val rnd = new scala.util.Random(7)
     val px = Array.fill(16 * 9)(rnd.nextDouble() * 10000 - 100)
