@@ -140,10 +140,10 @@ object GeoKernel {
 
 /** Catalyst `Expression`s for the geometry family (SURVEY.md §2.9 F9,
   * §2.2 P6, §2.4 J1): `st_area`, `st_envelope`, `st_intersects`,
-  * `st_intersection_area` over WKT strings.
+  * `st_intersection_area`, `st_coverage_ratio` over WKT strings.
   *
-  * Genuine engine extensions (Spark has no geo built-ins); all four
-  * implement `doGenCode` as a static call into [[GeoKernel]], so a
+  * Genuine engine extensions (Spark has no geo built-ins); each
+  * implements `doGenCode` as a static call into [[GeoKernel]], so a
   * plan using them keeps its whole-stage-codegen span. The
   * raster normalize kernel (R1), per-pixel hot, is expressed with
   * codegen'd built-ins instead — see [[Raster.normalizeS2]].
@@ -201,6 +201,38 @@ case class StIntersectionArea(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StIntersectionArea =
     copy(l, r)
   override def prettyName: String = "st_intersection_area"
+}
+
+/** `st_coverage_ratio(a, convex_b)` — area(a ∩ b) / area(b) in one
+  * kernel call, the per-AOI score of [[graft.operators.ProductSelect]].
+  * Null when b has no area, like the non-ANSI `Divide` it replaces
+  * (`st_intersection_area(a, b) / st_area(b)`). Unlike that quotient,
+  * a literal `b` stays a literal here: `st_area('<wkt>')` would fold
+  * to a double constant that generated code inlines, so each AOI
+  * would compile its own class, while a string literal is passed by
+  * reference and the code is the same for every AOI.
+  */
+case class StCoverageRatio(left: Expression, right: Expression)
+    extends BinaryExpression {
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val area = GeoKernel.area(b.asInstanceOf[UTF8String])
+    if (area == 0) null
+    else GeoKernel.intersectionArea(
+      a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String]) / area
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => {
+      val area = ctx.freshName("area")
+      s"""double $area = graft.functions.GeoKernel.area($b);
+         |if ($area == 0) ${ev.isNull} = true;
+         |else ${ev.value} =
+         |  graft.functions.GeoKernel.intersectionArea($a, $b) / $area;""".stripMargin
+    })
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): StCoverageRatio =
+    copy(l, r)
+  override def prettyName: String = "st_coverage_ratio"
 }
 
 /** Envelope grid-cell assignment for the bucketed spatial join
@@ -351,6 +383,9 @@ object GeoFunctions {
     ("st_intersection_area",
       info("st_intersection_area", "st_intersection_area(a, convex_b)"),
       (e: Seq[Expression]) => StIntersectionArea(e(0), e(1))),
+    ("st_coverage_ratio",
+      info("st_coverage_ratio", "st_coverage_ratio(a, convex_b) - area(a ∩ b) / area(b)"),
+      (e: Seq[Expression]) => StCoverageRatio(e(0), e(1))),
     ("st_grid_cells",
       info("st_grid_cells", "st_grid_cells(wkt, cell_size) - envelope grid cells"),
       (e: Seq[Expression]) => StGridCells(e(0), e(1))),

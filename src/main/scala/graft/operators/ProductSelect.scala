@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.GeoFunctions
+import scala.collection.immutable.ListMap
 
 /** The reference's flagship computation — "given an AOI and a product
   * catalog, pick the best product" (`/root/reference/code/
@@ -12,7 +13,7 @@ import graft.functions.GeoFunctions
   *
   * catalog scan → P2–P5 filters → N1 attribute unpack
   * (`map_from_entries`) → coverage scoring against a broadcast AOI
-  * (J1 as crossJoin(broadcast) + `st_intersection_area`) → A1
+  * (J1 as crossJoin(broadcast) + `st_coverage_ratio`) → A1
   * groupBy-sum → A2/O1–O3 argmax with most-recent tie-break.
   *
   * Scale design: the AOI side is one row (broadcast — zero shuffle);
@@ -44,27 +45,30 @@ object ProductSelect {
     * (`code/imagery_store.py:191-199`). Unknown attributes remain
     * reachable in `attrs` (SURVEY §1.3 decision).
     */
-  def unpackAttributes(catalog: DataFrame): DataFrame =
+  def unpackAttributes(catalog: DataFrame): DataFrame = {
+    val attrs = col("attrs")
     catalog
       .withColumn("attrs", map_from_entries(
         expr("transform(Attributes, a -> struct(a.Name, a.Value))")))
-      .withColumn("tileId", col("attrs")("tileId"))
-      .withColumn("cloudCover", col("attrs")("cloudCover").cast("double"))
-      .withColumn("productType", col("attrs")("productType"))
-      .withColumn("relativeOrbitNumber",
-        col("attrs")("relativeOrbitNumber").cast("int"))
+      .withColumns(ListMap(
+        "tileId" -> attrs("tileId"),
+        "cloudCover" -> attrs("cloudCover").cast("double"),
+        "productType" -> attrs("productType"),
+        "relativeOrbitNumber" -> attrs("relativeOrbitNumber").cast("int")))
+  }
 
-  /** Date-range bound, applied only for non-empty bounds: an empty
+  /** P2–P5: collection, product type, date range and cloud cover. A
+    * date bound applies only when non-empty: an empty
     * startDate/endDate means "unbounded" on that side. (Unconditional
     * `ContentDate.Start < ''` is false for every row, so default
     * Params would silently return an empty result.)
     */
-  private def dateBound(df: DataFrame, p: Params): DataFrame = {
-    var out = df
-    if (p.startDate.nonEmpty) out = out.filter(col("ContentDate.Start") > p.startDate)
-    if (p.endDate.nonEmpty) out = out.filter(col("ContentDate.Start") < p.endDate)
-    out
-  }
+  private def attributeConditions(p: Params): Seq[Column] =
+    Seq(col("Collection") === p.collection,
+      col("productType") === p.productType) ++
+      Option.when(p.startDate.nonEmpty)(col("ContentDate.Start") > p.startDate) ++
+      Option.when(p.endDate.nonEmpty)(col("ContentDate.Start") < p.endDate) :+
+      (col("cloudCover") <= p.cloudCoverMax)
 
   /** P2–P5 (+P6 spatial prefilter when no tile id): the predicates the
     * reference compiles into its OData `$filter`
@@ -73,29 +77,26 @@ object ProductSelect {
     * catalog (parquet stats / DSv2 pushdown / the OData connector).
     */
   def filterCandidates(unpacked: DataFrame, p: Params, aoiWkt: String): DataFrame = {
-    var df = dateBound(unpacked
-      .filter(col("Collection") === p.collection)
-      .filter(col("productType") === p.productType), p)
-      .filter(col("cloudCover") <= p.cloudCoverMax)
-    df = p.tileId match {
-      case Some(t) => df.filter(col("tileId") === t)
-      case None => df.filter(expr(s"st_intersects(footprint_wkt, '$aoiWkt')"))
+    val place = p.tileId match {
+      case Some(t) => col("tileId") === t
+      case None => call_function("st_intersects", col("footprint_wkt"), lit(aoiWkt))
     }
     // server page cap (O5): deterministic first page = oldest-first like
     // OData default ordering is unspecified; we take by ContentDate.Start
-    df.orderBy(col("ContentDate.Start")).limit(p.pageCap)
+    unpacked.filter((attributeConditions(p) :+ place).reduce(_ && _))
+      .orderBy(col("ContentDate.Start")).limit(p.pageCap)
   }
 
   /** J1 + F12 + A1 + A2: score candidates by AOI coverage ratio, pick
     * the best with most-recent tie-break
-    * (`code/imagery_store.py:241-259`).
+    * (`code/imagery_store.py:241-259`). The ratio is one
+    * `st_coverage_ratio` call, so the AOI reaches generated code only
+    * as a by-reference literal and every AOI reuses the same classes.
     */
   def scoreAndPick(candidates: DataFrame, aoiWkt: String): DataFrame =
     candidates
-      .withColumn("area_joined",
-        expr(s"st_intersection_area(footprint_wkt, '$aoiWkt')"))
       .withColumn("area_ratio",
-        col("area_joined") / expr(s"st_area('$aoiWkt')"))
+        call_function("st_coverage_ratio", col("footprint_wkt"), lit(aoiWkt)))
       .groupBy(col("Id"))
       .agg(
         sum("area_ratio").as("area_ratio"),
@@ -122,10 +123,8 @@ object ProductSelect {
   def bestPerAoi(spark: SparkSession, catalog: DataFrame, aois: DataFrame,
       p: Params = Params(), cellSize: Double = 1.0): DataFrame = {
     GeoFunctions.register(spark)
-    val candidates = dateBound(unpackAttributes(catalog)
-      .filter(col("Collection") === p.collection)
-      .filter(col("productType") === p.productType), p)
-      .filter(col("cloudCover") <= p.cloudCoverMax)
+    val candidates = unpackAttributes(catalog)
+      .filter(attributeConditions(p).reduce(_ && _))
     val joined = SpatialJoin.intersectJoin(spark, candidates, aois,
       "footprint_wkt", "aoi_wkt", cellSize)
     val w = Window.partitionBy("aoi_id")
@@ -164,13 +163,13 @@ object ProductSelect {
     GeoFunctions.register(spark)
     val picked = scoreAndPick(
       filterCandidates(unpackAttributes(catalog), p, aoiWkt), aoiWkt)
-    picked
-      .withColumn("uuid", col("Id"))
-      .withColumn("product_date", substring(col("origin_date"), 1, 10))
-      .withColumn("platform", element_at(split(col("name"), "_"), 1))
-      .withColumn("product_type", element_at(split(col("name"), "_"), 2))
-      .withColumn("bands", array(bands.map(lit): _*))
-      .withColumn("num_bands", lit(bands.size))
-      .withColumn("crs", lit("epsg:4326"))
+    picked.withColumns(ListMap(
+      "uuid" -> col("Id"),
+      "product_date" -> substring(col("origin_date"), 1, 10),
+      "platform" -> element_at(split(col("name"), "_"), 1),
+      "product_type" -> element_at(split(col("name"), "_"), 2),
+      "bands" -> array(bands.map(lit): _*),
+      "num_bands" -> lit(bands.size),
+      "crs" -> lit("epsg:4326")))
   }
 }

@@ -65,7 +65,9 @@ object Tx {
   /** `etl_process_by_polygon` = normalize → stack ONCE → clip →
     * optional reproject (`code/tx.py:123-138`, minus the double-stack
     * bug). The clip box is the AOI envelope (reference AOIs are
-    * bboxes).
+    * bboxes). Clip and normalize both work pixel by pixel, so each
+    * band is clipped first, before the stack: the same output, and the
+    * stack's shuffle carries only the clipped pixels.
     */
   def etlProcessByPolygon(chips: Dataset[BandChip], uint8: Boolean,
       clipBox: (Double, Double, Double, Double),
@@ -73,9 +75,9 @@ object Tx {
       (implicit s: SparkSession): Dataset[Scene] = {
     import s.implicits._
     val (bx1, by1, bx2, by2) = clipBox
-    val clipped = etlProcessTile(chips, uint8, None)
-      .map(sc => sc.copy(chips =
-        sc.chips.map(c => Raster.clipByBox(c, bx1, by1, bx2, by2))))
+    val clipped = etlProcessTile(
+      chips.map(bc => bc.copy(chip = Raster.clipByBox(bc.chip, bx1, by1, bx2, by2))),
+      uint8, None)
     target match {
       case None => clipped
       case Some((w, h, x1, y1, x2, y2)) =>

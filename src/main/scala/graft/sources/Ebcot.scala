@@ -7,6 +7,15 @@ package graft.sources
   * test fixture (Jp2Fixture) where it generates golden codestreams
   * for the bit-exact round-trip proof.
   *
+  * The decoder ([[decodeBlock]]) is a flat-array kernel: one padded
+  * flag word per coefficient, kept up to date as coefficients turn
+  * significant, and lookup tables for the zero-coding and sign
+  * contexts. The fixture encoder forms its contexts its own way (a
+  * per-coefficient neighbour scan over boolean planes); what it still
+  * shares with the decoder is this object's context numbering,
+  * [[freshContexts]], the Table D.1-D.3 rules [[zcContext]] and
+  * [[scContext]] the lookup tables are built from, and [[Mq]].
+  *
   * Scope = the default coding style (Scb = 0): no selective bypass,
   * no reset/termination per pass, not vertically causal, single MQ
   * codeword segment per code-block. Context model: 9 zero-coding +
@@ -16,12 +25,12 @@ package graft.sources
 object Ebcot {
 
   // context indices
-  private[graft] val CxZc = 0 // ..8
-  private[graft] val CxSc = 9 // ..13
-  private[graft] val CxMr = 14 // ..16
-  private[graft] val CxRl = 17
-  private[graft] val CxUni = 18
-  private[graft] val NCx = 19
+  private[graft] final val CxZc = 0 // ..8
+  private[graft] final val CxSc = 9 // ..13
+  private[graft] final val CxMr = 14 // ..16
+  private[graft] final val CxRl = 17
+  private[graft] final val CxUni = 18
+  private[graft] final val NCx = 19
 
   /** Fresh context bank with Table D.7 initial states: zero-coding
     * context 0 → 4, run-length → 3, UNIFORM → 46, rest 0.
@@ -76,87 +85,42 @@ object Ebcot {
     case _ => throw new IllegalArgumentException(s"($hc,$vc)")
   }
 
-  /** Mutable per-block coding state shared by decode (here) and the
-    * fixture encoder: magnitudes, significance, signs (1 = negative),
-    * the per-plane visited flag (pi) and the refined flag.
-    */
-  private[graft] final class Block(val w: Int, val h: Int, val band: Int) {
-    val v = new Array[Int](w * h)
-    val sig = new Array[Boolean](w * h)
-    val neg = new Array[Boolean](w * h)
-    val visited = new Array[Boolean](w * h)
-    val refined = new Array[Boolean](w * h)
+  // Flag word of one coefficient in the padded (w+2)×(h+2) grid. The
+  // low byte holds which of the eight neighbours are significant, the
+  // next nibble which of the four direct neighbours are negative; both
+  // are set when a neighbour turns significant, so a context is one
+  // table lookup. Padding cells absorb the writes at the block edges.
+  private final val NbW = 1; private final val NbE = 2
+  private final val NbN = 4; private final val NbS = 8
+  private final val NbNW = 16; private final val NbNE = 32
+  private final val NbSW = 64; private final val NbSE = 128
+  private final val NegW = 256; private final val NegE = 512
+  private final val NegN = 1024; private final val NegS = 2048
+  private final val Sig = 1 << 12
+  private final val Neg = 1 << 13
+  private final val Visited = 1 << 14
+  private final val Refined = 1 << 15
+  private final val NbAny = 0xff
 
-    private def sigAt(x: Int, y: Int): Int =
-      if (x < 0 || y < 0 || x >= w || y >= h) 0
-      else if (sig(y * w + x)) 1 else 0
-
-    def neighborSums(x: Int, y: Int): (Int, Int, Int) = (
-      sigAt(x - 1, y) + sigAt(x + 1, y),
-      sigAt(x, y - 1) + sigAt(x, y + 1),
-      sigAt(x - 1, y - 1) + sigAt(x + 1, y - 1) +
-        sigAt(x - 1, y + 1) + sigAt(x + 1, y + 1))
-
-    def zcCx(x: Int, y: Int): Int = {
-      val (hh, vv, dd) = neighborSums(x, y)
-      CxZc + zcContext(band, hh, vv, dd)
-    }
-
-    private def signContrib(x: Int, y: Int): Int =
-      if (x < 0 || y < 0 || x >= w || y >= h || !sig(y * w + x)) 0
-      else if (neg(y * w + x)) -1 else 1
-
-    def scCx(x: Int, y: Int): (Int, Int) = {
-      val clamp = (s: Int) => math.max(-1, math.min(1, s))
-      scContext(
-        clamp(signContrib(x - 1, y) + signContrib(x + 1, y)),
-        clamp(signContrib(x, y - 1) + signContrib(x, y + 1)))
-    }
-
-    def mrCx(x: Int, y: Int): Int = {
-      val i = y * w + x
-      if (refined(i)) CxMr + 2
-      else {
-        val (hh, vv, dd) = neighborSums(x, y)
-        if (hh + vv + dd > 0) CxMr + 1 else CxMr
-      }
-    }
-
-    /** Column starts a full 4-row stripe usable for run-length mode? */
-    def rlEligible(x: Int, y0: Int): Boolean =
-      y0 + 3 < h && (0 until 4).forall { k =>
-        val i = (y0 + k) * w + x
-        !sig(i) && !visited(i) && zcCx(x, y0 + k) == CxZc
-      }
-
-    /** Signed coefficients after all passes. */
-    def coefficients: Array[Int] = {
-      val out = new Array[Int](w * h)
-      var i = 0
-      while (i < out.length) {
-        out(i) = if (!sig(i)) 0 else if (neg(i)) -v(i) else v(i)
-        i += 1
-      }
-      out
-    }
+  /** Zero-coding context per band and neighbour byte ([[zcContext]]). */
+  private val zcLut: Array[Array[Int]] = Array.tabulate(4, 256) { (band, nb) =>
+    def bit(m: Int) = if ((nb & m) != 0) 1 else 0
+    CxZc + zcContext(band, bit(NbW) + bit(NbE), bit(NbN) + bit(NbS),
+      bit(NbNW) + bit(NbNE) + bit(NbSW) + bit(NbSE))
   }
 
-  /** Iterate the tier-1 scan order: stripes of 4 rows, columns
-    * left-to-right within a stripe, rows top-to-bottom within a
-    * column. `f(x, y, stripeTop)`.
+  /** Sign context and XOR bit ([[scContext]]), packed `cx << 1 | xor`,
+    * indexed by the direct neighbours' significance nibble plus their
+    * sign nibble shifted to bits 4-7.
     */
-  private[graft] def scan(w: Int, h: Int)(f: (Int, Int, Int) => Unit): Unit = {
-    var y0 = 0
-    while (y0 < h) {
-      var x = 0
-      while (x < w) {
-        var y = y0
-        val yEnd = math.min(y0 + 4, h)
-        while (y < yEnd) { f(x, y, y0); y += 1 }
-        x += 1
-      }
-      y0 += 4
-    }
+  private val scLut: Array[Int] = Array.tabulate(256) { i =>
+    def contrib(sig: Int, neg: Int) =
+      if ((i & sig) == 0) 0 else if ((i & (neg >> 4)) != 0) -1 else 1
+    def clamp(v: Int) = math.max(-1, math.min(1, v))
+    val (cx, xor) = scContext(
+      clamp(contrib(NbW, NegW) + contrib(NbE, NegE)),
+      clamp(contrib(NbN, NegN) + contrib(NbS, NegS)))
+    cx << 1 | xor
   }
 
   /** Decode one code-block: `numPasses` coding passes over bit-planes
@@ -171,23 +135,17 @@ object Ebcot {
     require(msbPlane >= 0,
       s"EBCOT: msbPlane=$msbPlane < 0 (zeroBitplanes exceeds Mb-1 — " +
         "corrupt tier-2 packet header)")
-    val mq = new Mq.Decoder(data, from, until)
-    val cx = freshContexts()
-    val blk = new Block(w, h, band)
+    val t1 = new BlockDecoder(new Mq.Decoder(data, from, until), w, h, band)
     var pass = 0
     var plane = msbPlane
     var passType = 2
     while (pass < numPasses && plane >= 0) {
-      passType match {
-        case 0 => sigPropDec(mq, cx, blk, plane)
-        case 1 => magRefDec(mq, cx, blk, plane)
-        case 2 => cleanupDec(mq, cx, blk, plane)
-      }
+      if (passType == 0) t1.sigProp(plane)
+      else if (passType == 1) t1.magRef(plane)
+      else t1.cleanup(plane)
       pass += 1
-      if (passType == 2) {
-        plane -= 1; passType = 0
-        java.util.Arrays.fill(blk.visited, false)
-      } else passType += 1
+      if (passType == 2) { plane -= 1; passType = 0 }
+      else passType += 1
     }
     // If the plane counter hit -1 before all claimed passes ran, the
     // header's numPasses exceeds the available bit-planes — a silent
@@ -195,74 +153,155 @@ object Ebcot {
     require(pass == numPasses,
       s"EBCOT: header claims $numPasses passes but only $pass fit in " +
         s"${msbPlane + 1} bit-planes (corrupt tier-2 packet header)")
-    blk.coefficients
+    t1.coefficients
   }
 
-  private def decodeSign(mq: Mq.Decoder, cx: Mq.Contexts, blk: Block,
-      x: Int, y: Int): Unit = {
-    val (sc, xor) = blk.scCx(x, y)
-    blk.neg(y * blk.w + x) = (mq.decode(cx, sc) ^ xor) == 1
-  }
+  /** One code-block's decode state: flag words and magnitudes on the
+    * padded grid, passes in the scan order of D.3 (stripes of four
+    * rows, columns left to right, rows top to bottom within a column).
+    */
+  private final class BlockDecoder(mq: Mq.Decoder, w: Int, h: Int,
+      band: Int) {
+    // Each pass copies the fields it uses into locals: the JIT reloads
+    // a field after every call it does not inline.
+    private val stride = w + 2
+    private val flags = new Array[Int](stride * (h + 2))
+    private val mag = new Array[Int](stride * (h + 2))
+    private val cx = freshContexts()
+    private val zc = zcLut(band)
 
-  private def sigPropDec(mq: Mq.Decoder, cx: Mq.Contexts, blk: Block,
-      plane: Int): Unit =
-    scan(blk.w, blk.h) { (x, y, _) =>
-      val i = y * blk.w + x
-      if (!blk.sig(i)) {
-        val zc = blk.zcCx(x, y)
-        if (zc != CxZc) { // has a significant neighbor
-          blk.visited(i) = true
-          if (mq.decode(cx, zc) == 1) {
-            blk.sig(i) = true
-            blk.v(i) |= 1 << plane
-            decodeSign(mq, cx, blk, x, y)
+    /** Decode the sign of the coefficient at `p`, mark it significant
+      * with magnitude bit `one`, and tell its neighbours.
+      */
+    private def becomeSignificant(p: Int, one: Int): Unit = {
+      val f = flags(p)
+      val sc = scLut((f & 0xf) | ((f >> 4) & 0xf0))
+      val neg = mq.decode(cx, sc >> 1) ^ (sc & 1) // 1 = negative
+      mag(p) |= one
+      val fl = flags
+      // branch-free on the (random) sign: `neg * NegX` is NegX or 0
+      fl(p) = f | Sig | neg * Neg
+      fl(p - 1) |= NbE | neg * NegE; fl(p + 1) |= NbW | neg * NegW
+      fl(p - stride) |= NbS | neg * NegS; fl(p + stride) |= NbN | neg * NegN
+      fl(p - stride - 1) |= NbSE; fl(p - stride + 1) |= NbSW
+      fl(p + stride - 1) |= NbNE; fl(p + stride + 1) |= NbNW
+    }
+
+    /** Significance propagation: insignificant coefficients with a
+      * significant neighbour.
+      */
+    def sigProp(plane: Int): Unit = {
+      val flags = this.flags; val zc = this.zc; val stride = this.stride
+      val mq = this.mq; val cx = this.cx
+      val one = 1 << plane
+      var y0 = 0
+      while (y0 < h) {
+        val rows = math.min(4, h - y0)
+        var x = 0
+        while (x < w) {
+          var p = (y0 + 1) * stride + x + 1
+          val end = p + rows * stride
+          while (p < end) {
+            val f = flags(p)
+            if ((f & Sig) == 0 && (f & NbAny) != 0) {
+              flags(p) = f | Visited
+              if (mq.decode(cx, zc(f & NbAny)) == 1) becomeSignificant(p, one)
+            }
+            p += stride
           }
+          x += 1
         }
+        y0 += 4
       }
     }
 
-  private def magRefDec(mq: Mq.Decoder, cx: Mq.Contexts, blk: Block,
-      plane: Int): Unit =
-    scan(blk.w, blk.h) { (x, y, _) =>
-      val i = y * blk.w + x
-      if (blk.sig(i) && !blk.visited(i)) {
-        val bit = mq.decode(cx, blk.mrCx(x, y))
-        blk.refined(i) = true
-        blk.v(i) |= bit << plane
+    /** Magnitude refinement: significant coefficients this plane's
+      * propagation pass did not visit.
+      */
+    def magRef(plane: Int): Unit = {
+      val flags = this.flags; val mag = this.mag; val stride = this.stride
+      val mq = this.mq; val cx = this.cx
+      var y0 = 0
+      while (y0 < h) {
+        val rows = math.min(4, h - y0)
+        var x = 0
+        while (x < w) {
+          var p = (y0 + 1) * stride + x + 1
+          val end = p + rows * stride
+          while (p < end) {
+            val f = flags(p)
+            if ((f & (Sig | Visited)) == Sig) {
+              val ctx =
+                if ((f & Refined) != 0) CxMr + 2
+                else if ((f & NbAny) != 0) CxMr + 1
+                else CxMr
+              mag(p) |= mq.decode(cx, ctx) << plane
+              flags(p) = f | Refined
+            }
+            p += stride
+          }
+          x += 1
+        }
+        y0 += 4
       }
     }
 
-  private def cleanupDec(mq: Mq.Decoder, cx: Mq.Contexts, blk: Block,
-      plane: Int): Unit = {
-    var skipUntilY = -1
-    var skipX = -1
-    scan(blk.w, blk.h) { (x, y, y0) =>
-      val i = y * blk.w + x
-      if (x == skipX && y <= skipUntilY) () // inside a zero run
-      else {
-        var runFirstSig = -1
-        if (y == y0 && blk.rlEligible(x, y0)) {
-          if (mq.decode(cx, CxRl) == 0) {
-            skipX = x; skipUntilY = y0 + 3 // whole column stays zero
-          } else {
-            runFirstSig = (mq.decode(cx, CxUni) << 1) | mq.decode(cx, CxUni)
-            // coefficients above the first significant one are zero
-            skipX = x; skipUntilY = y0 + runFirstSig - 1
-            val yy = y0 + runFirstSig
-            val ii = yy * blk.w + x
-            blk.sig(ii) = true
-            blk.v(ii) |= 1 << plane
-            decodeSign(mq, cx, blk, x, yy)
-            skipUntilY = yy // this one is done too
+    /** Cleanup: every coefficient not yet coded in this plane, with
+      * run-length mode on full stripe columns whose four coefficients
+      * are insignificant, unvisited and without significant
+      * neighbours. Clears the visited marks for the next plane.
+      */
+    def cleanup(plane: Int): Unit = {
+      val flags = this.flags; val zc = this.zc; val stride = this.stride
+      val mq = this.mq; val cx = this.cx
+      val one = 1 << plane
+      var y0 = 0
+      while (y0 < h) {
+        val rows = math.min(4, h - y0)
+        var x = 0
+        while (x < w) {
+          var p = (y0 + 1) * stride + x + 1
+          val end = p + rows * stride
+          if (rows == 4 &&
+            ((flags(p) | flags(p + stride) | flags(p + 2 * stride) |
+              flags(p + 3 * stride)) & (Sig | Visited | NbAny)) == 0) {
+            if (mq.decode(cx, CxRl) == 0) p = end // whole column stays zero
+            else {
+              // coefficients above the first significant one are zero
+              val r = (mq.decode(cx, CxUni) << 1) | mq.decode(cx, CxUni)
+              p += r * stride
+              becomeSignificant(p, one)
+              p += stride
+            }
           }
-        } else if (!blk.sig(i) && !blk.visited(i)) {
-          if (mq.decode(cx, blk.zcCx(x, y)) == 1) {
-            blk.sig(i) = true
-            blk.v(i) |= 1 << plane
-            decodeSign(mq, cx, blk, x, y)
+          while (p < end) {
+            val f = flags(p)
+            if ((f & (Sig | Visited)) == 0) {
+              if (mq.decode(cx, zc(f & NbAny)) == 1) becomeSignificant(p, one)
+            } else if ((f & Visited) != 0) flags(p) = f & ~Visited
+            p += stride
           }
+          x += 1
         }
+        y0 += 4
       }
+    }
+
+    /** Signed coefficients, row-major without the padding. */
+    def coefficients: Array[Int] = {
+      val out = new Array[Int](w * h)
+      var y = 0
+      while (y < h) {
+        var p = (y + 1) * stride + 1
+        var i = y * w
+        val end = i + w
+        while (i < end) {
+          out(i) = if ((flags(p) & Neg) != 0) -mag(p) else mag(p)
+          i += 1; p += 1
+        }
+        y += 1
+      }
+      out
     }
   }
 }

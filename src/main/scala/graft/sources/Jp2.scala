@@ -129,7 +129,10 @@ object Jp2 {
     * single-tile profile (one tile-part, one layer, default precinct
     * and code-block style); anything else still refuses loudly via
     * the requires. Jp2Spec proves decode∘encode bit-exact against
-    * the test-only fixture encoder.
+    * the test-only fixture encoder, whose tier-1 coder shares with
+    * this decoder only Ebcot's context rules, numbering and initial
+    * states and the MQ coder (its context formation is its own, see
+    * [[Ebcot]]).
     */
   object T800Entropy extends EntropyDecoder {
     def decode(header: Header, bytes: Array[Byte], component: Int): Array[Int] =
@@ -828,7 +831,11 @@ object Wavelet97 {
   * symmetric extension (period 2n-2), which is how the spec defines
   * boundary handling — the reflection of an even index is always
   * even and of an odd index always odd, so each lifting step reads
-  * only already-final samples of the right parity.
+  * only already-final samples of the right parity. The forward
+  * transform (used by the test fixture's encoder) reflects indices
+  * modulo the period; the decode path's inverse lifts each
+  * Mallat-ordered line straight into one reused buffer, where the
+  * extension is an index clamp.
   */
 object Wavelet53 {
 
@@ -862,22 +869,39 @@ object Wavelet53 {
 
   /** Inverse 1-D, exact inverse of [[forward1d]]. */
   def inverse1d(y: Array[Int]): Array[Int] = {
-    val n = y.length
-    if (n == 1) return y.clone()
-    val x = new Array[Int](n)
-    def ye(i: Int) = y(refl(i, n))
-    var i = 0
-    while (i < n) { // un-update
-      x(i) = y(i) - Math.floorDiv(ye(i - 1) + ye(i + 1) + 2, 4)
-      i += 2
-    }
-    def xe(i: Int) = x(refl(i, n)) // reflection of even is even: final
-    i = 1
-    while (i < n) { // un-predict
-      x(i) = y(i) + Math.floorDiv(xe(i - 1) + xe(i + 1), 2)
-      i += 2
-    }
+    val x = new Array[Int](y.length)
+    inverseLine(deinterleave(y), 0, 1, y.length, x)
     x
+  }
+
+  /** Inverse lifting of one Mallat-ordered line of `n` samples, read
+    * from `a` at `off`, `off + step`, … (the ceil(n/2) lows first,
+    * then the highs), into the interleaved signal `x(0 until n)`.
+    * The symmetric extension reduces to clamped neighbour indices:
+    * the first low's left high is the first high, the last low's
+    * right high (odd n) is the last high, and the last high's right
+    * low (even n) is the last low. Floor division by 4 and 2 is an
+    * arithmetic shift.
+    */
+  private def inverseLine(a: Array[Int], off: Int, step: Int, n: Int,
+      x: Array[Int]): Unit = {
+    if (n == 1) { x(0) = a(off); return }
+    val nh = n / 2
+    val nl = n - nh
+    val hi = off + nl * step
+    var i = 0
+    while (i < nl) { // un-update: x_2i = s_i - floor((d_i-1 + d_i + 2) / 4)
+      val dl = a(hi + math.max(i - 1, 0) * step)
+      val dr = a(hi + math.min(i, nh - 1) * step)
+      x(2 * i) = a(off + i * step) - ((dl + dr + 2) >> 2)
+      i += 1
+    }
+    i = 0
+    while (i < nh) { // un-predict: x_2i+1 = d_i + floor((x_2i + x_2i+2) / 2)
+      val right = if (2 * i + 2 < n) x(2 * i + 2) else x(2 * i)
+      x(2 * i + 1) = a(hi + i * step) + ((x(2 * i) + right) >> 1)
+      i += 1
+    }
   }
 
   /** Split an interleaved line into [low | high] (Mallat order):
@@ -891,14 +915,6 @@ object Wavelet53 {
     out
   }
 
-  private def interleave(m: Array[Int]): Array[Int] = {
-    val n = m.length; val nl = n - n / 2
-    val out = new Array[Int](n)
-    var i = 0
-    while (i < n) { out(i) = m(if (i % 2 == 0) i / 2 else nl + i / 2); i += 1 }
-    out
-  }
-
   /** Multi-level forward 2-D over a row-major image: rows then
     * columns per level, recursing on the LL (top-left) region.
     * Output is the standard Mallat layout.
@@ -909,14 +925,17 @@ object Wavelet53 {
     var (cw, ch) = (w, h)
     var lev = 0
     while (lev < levels && (cw > 1 || ch > 1)) {
-      transformRegion(a, w, cw, ch, forward = true)
+      forwardRegion(a, w, cw, ch)
       cw = cw - cw / 2; ch = ch - ch / 2
       lev += 1
     }
     a
   }
 
-  /** Multi-level inverse 2-D — exact inverse of [[forward2d]]. */
+  /** Multi-level inverse 2-D — exact inverse of [[forward2d]]. Each
+    * level lifts the columns, then the rows, of its region through one
+    * line buffer.
+    */
   def inverse2d(coeffs: Array[Int], w: Int, h: Int, levels: Int): Array[Int] = {
     require(coeffs.length == w * h, s"${coeffs.length} != $w x $h")
     val a = coeffs.clone()
@@ -932,51 +951,46 @@ object Wavelet53 {
       cw = cw - cw / 2; ch = ch - ch / 2
       lev += 1
     }
-    for ((lw, lh) <- regions) transformRegion(a, w, lw, lh, forward = false)
+    val line = new Array[Int](math.max(w, h))
+    for ((lw, lh) <- regions) {
+      var c = 0
+      while (c < lw) {
+        inverseLine(a, c, w, lh, line)
+        var r = 0
+        while (r < lh) { a(r * w + c) = line(r); r += 1 }
+        c += 1
+      }
+      var r = 0
+      while (r < lh) {
+        inverseLine(a, r * w, 1, lw, line)
+        System.arraycopy(line, 0, a, r * w, lw)
+        r += 1
+      }
+    }
     a
   }
 
-  /** One level over the top-left cw×ch region of a row-major array
-    * with full-image stride `stride`.
+  /** One forward level over the top-left cw×ch region of a row-major
+    * array with full-image stride `stride`.
     */
-  private def transformRegion(a: Array[Int], stride: Int, cw: Int, ch: Int,
-      forward: Boolean): Unit = {
+  private def forwardRegion(a: Array[Int], stride: Int, cw: Int, ch: Int): Unit = {
     val row = new Array[Int](cw)
     val colBuf = new Array[Int](ch)
-    if (forward) {
-      var r = 0
-      while (r < ch) {
-        System.arraycopy(a, r * stride, row, 0, cw)
-        val t = deinterleave(forward1d(row))
-        System.arraycopy(t, 0, a, r * stride, cw)
-        r += 1
-      }
-      var c = 0
-      while (c < cw) {
-        var r2 = 0
-        while (r2 < ch) { colBuf(r2) = a(r2 * stride + c); r2 += 1 }
-        val t = deinterleave(forward1d(colBuf))
-        r2 = 0
-        while (r2 < ch) { a(r2 * stride + c) = t(r2); r2 += 1 }
-        c += 1
-      }
-    } else {
-      var c = 0
-      while (c < cw) {
-        var r2 = 0
-        while (r2 < ch) { colBuf(r2) = a(r2 * stride + c); r2 += 1 }
-        val t = inverse1d(interleave(colBuf))
-        r2 = 0
-        while (r2 < ch) { a(r2 * stride + c) = t(r2); r2 += 1 }
-        c += 1
-      }
-      var r = 0
-      while (r < ch) {
-        System.arraycopy(a, r * stride, row, 0, cw)
-        val t = inverse1d(interleave(row))
-        System.arraycopy(t, 0, a, r * stride, cw)
-        r += 1
-      }
+    var r = 0
+    while (r < ch) {
+      System.arraycopy(a, r * stride, row, 0, cw)
+      val t = deinterleave(forward1d(row))
+      System.arraycopy(t, 0, a, r * stride, cw)
+      r += 1
+    }
+    var c = 0
+    while (c < cw) {
+      var r2 = 0
+      while (r2 < ch) { colBuf(r2) = a(r2 * stride + c); r2 += 1 }
+      val t = deinterleave(forward1d(colBuf))
+      r2 = 0
+      while (r2 < ch) { a(r2 * stride + c) = t(r2); r2 += 1 }
+      c += 1
     }
   }
 }

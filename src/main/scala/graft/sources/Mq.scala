@@ -36,14 +36,25 @@ object Mq {
     0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0,
     0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
 
-  /** Context state: probability-table index + current MPS sense.
-    * Initial states per Table D.7 are the CALLER's business (tier-1
-    * sets UNI=46, RL=3, first zero-coding=4).
+  /** Transition tables over the packed context word `2 * state + mps`:
+    * the Qe of the word's state, and the word after an MPS or an LPS
+    * decision (the LPS word carries Table C.2's SWITCH of the MPS
+    * sense). One load per decision instead of four table lookups.
+    */
+  private val QeOf = Array.tabulate(2 * Qe.length)(i => Qe(i >> 1))
+  private val AfterMps = Array.tabulate(2 * Qe.length)(i =>
+    2 * Nmps(i >> 1) + (i & 1))
+  private val AfterLps = Array.tabulate(2 * Qe.length)(i =>
+    2 * Nlps(i >> 1) + ((i & 1) ^ Switch(i >> 1)))
+
+  /** Context states, one packed word per context: probability-table
+    * index times two plus the current MPS sense. Initial states per
+    * Table D.7 are the CALLER's business (tier-1 sets UNI=46, RL=3,
+    * first zero-coding=4).
     */
   final class Contexts(n: Int) {
-    val state = new Array[Int](n)
-    val mps = new Array[Int](n)
-    def set(cx: Int, s: Int): Unit = { state(cx) = s; mps(cx) = 0 }
+    private[Mq] val word = new Array[Int](n)
+    def set(cx: Int, s: Int): Unit = word(cx) = 2 * s
   }
 
   /** Decoder, C.3 software conventions: C's high half is compared
@@ -67,17 +78,23 @@ object Mq {
     // BYTEIN (C.3.4)
     private def byteIn(): Unit = {
       if (byteAt(bp) == 0xff) {
-        if (byteAt(bp + 1) > 0x8f) { c += 0xff00; ct = 8 }
-        else { bp += 1; c += byteAt(bp) << 9; ct = 7 }
+        val next = byteAt(bp + 1)
+        if (next > 0x8f) { c += 0xff00; ct = 8 }
+        else { bp += 1; c += next << 9; ct = 7 }
       } else { bp += 1; c += byteAt(bp) << 8; ct = 8 }
     }
 
+    /** RENORMD (C.3.3): shift A and C left until A's bit 15 is set,
+      * all the shifts up to the next BYTEIN at once instead of one
+      * loop turn per bit.
+      */
     private def renorm(): Unit = {
-      while ({
+      var n = Integer.numberOfLeadingZeros(a) - 16 // 0 < a < 0x8000 here
+      while (n > 0) {
         if (ct == 0) byteIn()
-        a <<= 1; c <<= 1; ct -= 1
-        (a & 0x8000) == 0
-      }) ()
+        val s = math.min(n, ct)
+        a <<= s; c <<= s; ct -= s; n -= s
+      }
     }
 
     /** DECODE one decision in context `cx` (C.3.2 with the
@@ -85,19 +102,15 @@ object Mq {
       * at the bottom, conditionally exchanged when A-Qe < Qe).
       */
     def decode(cxs: Contexts, cx: Int): Int = {
-      val s = cxs.state(cx)
-      val qe = Qe(s)
+      val words = cxs.word
+      val w = words(cx)
+      val qe = QeOf(w)
       a -= qe
-      if (((c >>> 16) & 0xffff) < qe) {
+      if ((c >>> 16) < qe) {
         // LPS_EXCHANGE (a holds A-Qe for the conditional-exchange test)
         val d =
-          if (a < qe) { cxs.state(cx) = Nmps(s); cxs.mps(cx) }
-          else {
-            val bit = 1 - cxs.mps(cx)
-            if (Switch(s) == 1) cxs.mps(cx) ^= 1
-            cxs.state(cx) = Nlps(s)
-            bit
-          }
+          if (a < qe) { words(cx) = AfterMps(w); w & 1 }
+          else { words(cx) = AfterLps(w); 1 - (w & 1) }
         a = qe
         renorm()
         d
@@ -106,15 +119,11 @@ object Mq {
         if ((a & 0x8000) == 0) {
           // MPS_EXCHANGE
           val d =
-            if (a < qe) {
-              val bit = 1 - cxs.mps(cx)
-              if (Switch(s) == 1) cxs.mps(cx) ^= 1
-              cxs.state(cx) = Nlps(s)
-              bit
-            } else { cxs.state(cx) = Nmps(s); cxs.mps(cx) }
+            if (a < qe) { words(cx) = AfterLps(w); 1 - (w & 1) }
+            else { words(cx) = AfterMps(w); w & 1 }
           renorm()
           d
-        } else cxs.mps(cx)
+        } else w & 1
       }
     }
   }
@@ -154,20 +163,20 @@ object Mq {
 
     /** ENCODE decision `d` in context `cx`. */
     def encode(cxs: Contexts, cx: Int, d: Int): Unit = {
-      val s = cxs.state(cx)
-      val qe = Qe(s)
-      if (d == cxs.mps(cx)) { // CODEMPS
+      val words = cxs.word
+      val w = words(cx)
+      val qe = QeOf(w)
+      if (d == (w & 1)) { // CODEMPS
         a -= qe
         if ((a & 0x8000) == 0) {
           if (a < qe) a = qe else c += qe
-          cxs.state(cx) = Nmps(s)
+          words(cx) = AfterMps(w)
           renorm()
         } else c += qe
       } else { // CODELPS
         a -= qe
         if (a < qe) c += qe else a = qe
-        if (Switch(s) == 1) cxs.mps(cx) ^= 1
-        cxs.state(cx) = Nlps(s)
+        words(cx) = AfterLps(w)
         renorm()
       }
     }

@@ -39,17 +39,18 @@ object RasterIO {
     * entropy decoding); the scan stays an embarrassingly parallel
     * map, one file per task slot, no shuffle.
     */
-  def decodeBandPixels(bands: DataFrame): DataFrame = {
-    val dec = udf { content: Array[Byte] =>
-      val (h, px) = Jp2.decode(content)
-      (h.width, h.height, px)
-    }
+  def decodeBandPixels(bands: DataFrame): DataFrame =
     bands
-      .withColumn("decoded", dec(col("content")))
+      .withColumn("decoded", decodeUdf(col("content")))
       .withColumn("width", col("decoded._1"))
       .withColumn("height", col("decoded._2"))
       .withColumn("pixels", col("decoded._3"))
       .drop("decoded")
+
+  /** Built once: making a UDF derives its encoders by reflection. */
+  private val decodeUdf = udf { content: Array[Byte] =>
+    val (h, px) = Jp2.decode(content)
+    (h.width, h.height, px)
   }
 
   /** S5, overview form: decode every band at 1/2^discard scale via

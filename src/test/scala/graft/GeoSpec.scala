@@ -149,6 +149,29 @@ class GeoSpec extends AnyFunSuite with SharedSpark {
     } finally spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
   }
 
+  test("st_coverage_ratio = st_intersection_area / st_area, null when the second has no area") {
+    GeoFunctions.register(spark)
+    val half = "POLYGON ((1.3584 43.2, 1.7 43.2, 1.7 43.8, 1.3584 43.8, 1.3584 43.2))"
+    val flat = "POLYGON ((1 1, 2 2, 1 1))"
+    for ((mode, wholeStage) <- Seq(("CODEGEN_ONLY", "true"), ("NO_CODEGEN", "false"))) {
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      try {
+        // the second argument varies by row, so nothing constant-folds
+        val rows = spark.range(2).selectExpr(
+          s"st_coverage_ratio('$half', IF(id = 0, '$toulouse', '$flat'))",
+          s"st_intersection_area('$half', '$toulouse') / st_area('$toulouse')")
+          .collect()
+        assert(rows(0).getDouble(0) == rows(0).getDouble(1), mode)
+        assert(rows(0).getDouble(0) > 0.4 && rows(0).getDouble(0) < 0.6, mode)
+        assert(rows(1).isNullAt(0), mode)
+      } finally {
+        spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+        spark.conf.set("spark.sql.codegen.wholeStage", "true")
+      }
+    }
+  }
+
   test("st_* expressions evaluate through SQL") {
     GeoFunctions.register(spark)
     val row = spark.sql(

@@ -11,14 +11,90 @@ import java.io.{ByteArrayOutputStream, DataOutputStream}
   * library deliberately ships no JP2 WRITER (the reference never
   * writes JP2 — only GeoTIFF, S7); this lives in test scope.
   *
-  * The encoder mirrors Ebcot's decoder pass structure using the same
-  * shared context-formation code (Ebcot.Block), so a context-model
-  * bug cannot hide by symmetric cancellation in MQ (MqSpec pins the
-  * coder itself independently).
+  * The encoder mirrors Ebcot's decoder pass structure but forms its
+  * contexts with its own code ([[Block]], a direct neighbour scan),
+  * independent of the decoder's flag-word kernel; the two share only
+  * the Table D.1-D.3 rules (`Ebcot.zcContext`/`scContext`), the
+  * context numbering and initial states (`Ebcot.freshContexts`), and
+  * the MQ coder, which MqSpec pins on its own.
   */
 object Jp2Fixture {
+  import Ebcot.{CxMr, CxZc, scContext, zcContext}
 
   val guardBits = 2
+
+  /** Per-block coding state of the encoder: significance, signs,
+    * the per-plane visited flag (pi) and the refined flag, with the
+    * Annex D contexts formed by scanning the neighbours directly —
+    * an implementation independent of the decoder's flag-word kernel
+    * ([[Ebcot.decodeBlock]]).
+    */
+  private final class Block(val w: Int, val h: Int, val band: Int) {
+    val sig = new Array[Boolean](w * h)
+    val neg = new Array[Boolean](w * h)
+    val visited = new Array[Boolean](w * h)
+    val refined = new Array[Boolean](w * h)
+
+    private def sigAt(x: Int, y: Int): Int =
+      if (x < 0 || y < 0 || x >= w || y >= h) 0
+      else if (sig(y * w + x)) 1 else 0
+
+    def neighborSums(x: Int, y: Int): (Int, Int, Int) = (
+      sigAt(x - 1, y) + sigAt(x + 1, y),
+      sigAt(x, y - 1) + sigAt(x, y + 1),
+      sigAt(x - 1, y - 1) + sigAt(x + 1, y - 1) +
+        sigAt(x - 1, y + 1) + sigAt(x + 1, y + 1))
+
+    def zcCx(x: Int, y: Int): Int = {
+      val (hh, vv, dd) = neighborSums(x, y)
+      CxZc + zcContext(band, hh, vv, dd)
+    }
+
+    private def signContrib(x: Int, y: Int): Int =
+      if (x < 0 || y < 0 || x >= w || y >= h || !sig(y * w + x)) 0
+      else if (neg(y * w + x)) -1 else 1
+
+    def scCx(x: Int, y: Int): (Int, Int) = {
+      val clamp = (s: Int) => math.max(-1, math.min(1, s))
+      scContext(
+        clamp(signContrib(x - 1, y) + signContrib(x + 1, y)),
+        clamp(signContrib(x, y - 1) + signContrib(x, y + 1)))
+    }
+
+    def mrCx(x: Int, y: Int): Int = {
+      val i = y * w + x
+      if (refined(i)) CxMr + 2
+      else {
+        val (hh, vv, dd) = neighborSums(x, y)
+        if (hh + vv + dd > 0) CxMr + 1 else CxMr
+      }
+    }
+
+    /** Column starts a full 4-row stripe usable for run-length mode? */
+    def rlEligible(x: Int, y0: Int): Boolean =
+      y0 + 3 < h && (0 until 4).forall { k =>
+        val i = (y0 + k) * w + x
+        !sig(i) && !visited(i) && zcCx(x, y0 + k) == CxZc
+      }
+  }
+
+  /** Iterate the tier-1 scan order: stripes of 4 rows, columns
+    * left-to-right within a stripe, rows top-to-bottom within a
+    * column. `f(x, y, stripeTop)`.
+    */
+  private def scan(w: Int, h: Int)(f: (Int, Int, Int) => Unit): Unit = {
+    var y0 = 0
+    while (y0 < h) {
+      var x = 0
+      while (x < w) {
+        var y = y0
+        val yEnd = math.min(y0 + 4, h)
+        while (y < yEnd) { f(x, y, y0); y += 1 }
+        x += 1
+      }
+      y0 += 4
+    }
+  }
 
   /** Tier-1 encode one code-block; None when all-zero (the block is
     * then simply not included in its packet). Returns (MQ segment,
@@ -33,7 +109,7 @@ object Jp2Fixture {
     val numPasses = 3 * numbps - 2
     val mq = new Mq.Encoder
     val cx = Ebcot.freshContexts()
-    val blk = new Ebcot.Block(w, h, band)
+    val blk = new Block(w, h, band)
     var pass = 0
     var plane = numbps - 1
     var passType = 2 // the MSB plane has only a cleanup pass
@@ -52,7 +128,7 @@ object Jp2Fixture {
     Some((mq.flush(), numbps, numPasses))
   }
 
-  private def encodeSign(mq: Mq.Encoder, cx: Mq.Contexts, blk: Ebcot.Block,
+  private def encodeSign(mq: Mq.Encoder, cx: Mq.Contexts, blk: Block,
       coeffs: Array[Int], x: Int, y: Int): Unit = {
     val i = y * blk.w + x
     blk.sig(i) = true
@@ -61,9 +137,9 @@ object Jp2Fixture {
     mq.encode(cx, sc, (if (blk.neg(i)) 1 else 0) ^ xor)
   }
 
-  private def spp(mq: Mq.Encoder, cx: Mq.Contexts, blk: Ebcot.Block,
+  private def spp(mq: Mq.Encoder, cx: Mq.Contexts, blk: Block,
       mag: Array[Int], coeffs: Array[Int], plane: Int): Unit =
-    Ebcot.scan(blk.w, blk.h) { (x, y, _) =>
+    scan(blk.w, blk.h) { (x, y, _) =>
       val i = y * blk.w + x
       if (!blk.sig(i)) {
         val zc = blk.zcCx(x, y)
@@ -72,16 +148,15 @@ object Jp2Fixture {
           val bit = (mag(i) >>> plane) & 1
           mq.encode(cx, zc, bit)
           if (bit == 1) {
-            blk.v(i) |= 1 << plane
             encodeSign(mq, cx, blk, coeffs, x, y)
           }
         }
       }
     }
 
-  private def mrp(mq: Mq.Encoder, cx: Mq.Contexts, blk: Ebcot.Block,
+  private def mrp(mq: Mq.Encoder, cx: Mq.Contexts, blk: Block,
       mag: Array[Int], plane: Int): Unit =
-    Ebcot.scan(blk.w, blk.h) { (x, y, _) =>
+    scan(blk.w, blk.h) { (x, y, _) =>
       val i = y * blk.w + x
       if (blk.sig(i) && !blk.visited(i)) {
         mq.encode(cx, blk.mrCx(x, y), (mag(i) >>> plane) & 1)
@@ -89,11 +164,11 @@ object Jp2Fixture {
       }
     }
 
-  private def cup(mq: Mq.Encoder, cx: Mq.Contexts, blk: Ebcot.Block,
+  private def cup(mq: Mq.Encoder, cx: Mq.Contexts, blk: Block,
       mag: Array[Int], coeffs: Array[Int], plane: Int): Unit = {
     var skipX = -1
     var skipUntilY = -1
-    Ebcot.scan(blk.w, blk.h) { (x, y, y0) =>
+    scan(blk.w, blk.h) { (x, y, y0) =>
       val i = y * blk.w + x
       if (x == skipX && y <= skipUntilY) ()
       else if (y == y0 && blk.rlEligible(x, y0)) {
@@ -108,7 +183,6 @@ object Jp2Fixture {
             mq.encode(cx, Ebcot.CxUni, (k >> 1) & 1)
             mq.encode(cx, Ebcot.CxUni, k & 1)
             val yy = y0 + k
-            blk.v(yy * blk.w + x) |= 1 << plane
             encodeSign(mq, cx, blk, coeffs, x, yy)
             skipX = x; skipUntilY = yy
         }
@@ -116,7 +190,6 @@ object Jp2Fixture {
         val bit = (mag(i) >>> plane) & 1
         mq.encode(cx, blk.zcCx(x, y), bit)
         if (bit == 1) {
-          blk.v(i) |= 1 << plane
           encodeSign(mq, cx, blk, coeffs, x, y)
         }
       }

@@ -238,6 +238,42 @@ class Jp2Spec extends AnyFunSuite {
     }
   }
 
+  test("decode(encode(img)) == img across code-block shapes, depths and levels (seeded sweep)") {
+    // Code-blocks from 4x4 up to Sentinel-2's 64x64, non-square ones,
+    // image heights off the 4-row stripe grid (run-length stripe
+    // tails), 8- and 12-bit samples, 0-5 levels. Content mixes a
+    // smooth field, sparse spikes on a flat field (long zero runs:
+    // the run-length path) and full-range noise (dense blocks).
+    val rng = new Random(4242)
+    val blocks = Seq((4, 4), (8, 8), (16, 16), (32, 32), (64, 64),
+      (4, 64), (64, 4), (8, 32), (32, 8), (16, 4), (4, 16))
+    for {
+      (cbw, cbh) <- blocks
+      depth <- Seq(8, 12)
+      levels <- 0 to 5
+    } {
+      val w = 2 * cbw - 3 + rng.nextInt(40)
+      val h = 4 * (8 + rng.nextInt(16)) + 1 + rng.nextInt(3) // never 4k
+      val max = (1 << depth) - 1
+      val (fx, fy) = (rng.nextDouble() * 0.3, rng.nextDouble() * 0.3)
+      val kind = rng.nextInt(3)
+      val img = Array.tabulate(w * h) { i =>
+        val (x, y) = (i % w, i / w)
+        kind match {
+          case 0 => ((max / 2) * (1 + math.sin(fx * x) * math.cos(fy * y))).toInt
+          case 1 => if (rng.nextInt(40) == 0) rng.nextInt(max + 1) else max / 3
+          case _ => rng.nextInt(max + 1)
+        }
+      }
+      val cs = graft.Jp2Fixture.encode(img, w, h, levels, bitDepth = depth,
+        cbw = cbw, cbh = cbh)
+      val (hdr, px) = Jp2.decode(cs)
+      assert(hdr.codeblockW == cbw && hdr.codeblockH == cbh)
+      assert(java.util.Arrays.equals(px, img),
+        s"${w}x$h cb=${cbw}x$cbh depth=$depth levels=$levels kind=$kind")
+    }
+  }
+
   test("full decode across multiple tile-parts (Sentinel's per-resolution split)") {
     val rng = new Random(67)
     val (w, h, levels) = (64, 48, 3)

@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.ProductSelect
 import graft.operators.ProductSelect.Params
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -73,6 +74,21 @@ class ProductSelectSpec extends AnyFunSuite with SharedSpark {
     assert(row.getAs[String]("product_type") == "MSIL2A")
     assert(row.getAs[scala.collection.Seq[String]]("bands")
       == Seq("B02", "B03", "B04", "B08"))
+  }
+
+  test("a second AOI compiles no new code (the AOI is a literal held by reference)") {
+    val cat = catalog(Seq(
+      prod("full1", "2023-06-15", "2.0", full),
+      prod("half1", "2023-06-20", "1.0", half)))
+    val other = "POLYGON ((1.3 43.4, 1.6 43.4, 1.6 43.7, 1.3 43.7, 1.3 43.4))"
+    def best(wkt: String) =
+      ProductSelect.bestProduct(spark, cat, wkt, p).head().getAs[String]("uuid")
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    assert(best(aoi) == "full1")
+    val before = compiles.getCount
+    assert(best(other) == "full1")
+    assert(compiles.getCount == before,
+      s"${compiles.getCount - before} classes compiled for the second AOI")
   }
 
   test("tie-break: equal coverage -> most recent OriginDate wins") {

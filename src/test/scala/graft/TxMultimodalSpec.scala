@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.Raster
 import graft.functions.Raster.Chip
 import graft.operators.{Multimodal, Tx}
 import graft.operators.Multimodal.Media
@@ -44,6 +45,31 @@ class TxMultimodalSpec extends AnyFunSuite with SharedSpark {
     val c = out(0).chips(0)
     assert(c.width == 2 && c.height == 2)
     assert(c.px.toSeq == Seq(5.0, 6.0, 9.0, 10.0))
+  }
+
+  test("etlProcessByPolygon clips each band first: output equals normalize → stack → clip") {
+    implicit val s = spark
+    import s.implicits._
+    val rng = new scala.util.Random(77)
+    val in = for (scene <- Seq("sc1", "sc2"); band <- Seq("B08", "B02", "B04")) yield {
+      val (w, h) = (4 + rng.nextInt(13), 4 + rng.nextInt(13))
+      val (x1, y1) = (rng.nextDouble() * 6, rng.nextDouble() * 6)
+      BandChip(scene, band, Chip(w, h, x1, y1, x1 + 0.5 * w, y1 + 0.75 * h,
+        -1.0, Array.fill(w * h)(rng.nextInt(12000).toDouble)))
+    }
+    val box = (2.5 + rng.nextDouble(), 3.0 + rng.nextDouble(), 7.0, 9.5)
+    def flat(scenes: Array[Tx.Scene]) = scenes.sortBy(_.scene).toSeq.map { sc =>
+      (sc.scene, sc.bands, sc.chips.map(c =>
+        (c.width, c.height, c.minx, c.miny, c.maxx, c.maxy, c.nodata, c.px.toSeq)))
+    }
+    for (uint8 <- Seq(true, false)) {
+      val got = Tx.etlProcessByPolygon(in.toDS(), uint8, box).collect()
+      val want = Tx.etlProcessTile(in.toDS(), uint8).collect().map(sc =>
+        sc.copy(chips = sc.chips.map(c =>
+          Raster.clipByBox(c, box._1, box._2, box._3, box._4))))
+      assert(flat(got) == flat(want), s"uint8=$uint8")
+      assert(want.flatMap(_.chips).exists(c => c.width > 0 && c.height > 0))
+    }
   }
 
   test("multimodal: batch feature extraction is deterministic + typed") {
