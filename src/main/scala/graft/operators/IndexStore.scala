@@ -699,15 +699,52 @@ object IndexStore {
     * land commits INTO the index between retrains without
     * coordinating, while q106's drift gate and q108's migration audit
     * decide when the model itself has rotted enough to rebuild.
+    *
+    * The store's premise that ids are unique within a version is
+    * enforced here: a batch that repeats an id, or adds an id that is
+    * already live, is refused with an error naming the id, and its
+    * staged files are deleted. A rebase re-checks the batch against
+    * the files the interleaved commits added.
     */
   def append(encoded: DataFrame, out: String, idCol: String = "vec_id",
       cellCol: String = "cell", codeCol: String = "code"): Unit = {
     val s = encoded.sparkSession
     val man = requireManifest(s, out)
     val files = stageIn(encoded, out, idCol, cellCol, codeCol)
+    val staged = readFiles(s, out, man.schema, files)
+    try requireFreshIds(staged,
+      readVersion(s, out, man.version, man.schema, man.files), idCol)
+    catch { case e: IllegalArgumentException =>
+      val (fs, _) = hfs(s, codesRoot(out))
+      files.foreach(f => fs.delete(new Path(s"${codesRoot(out)}/${f.path}"), false))
+      throw e
+    }
     commitWithRetry(s, out, man, man.schema, man.model, Set.empty, files,
-      fullReplace = false, validate = _ => ())
+      fullReplace = false,
+      validate = newest => requireFreshIds(staged, readFiles(s, out, man.schema,
+        newest.files.filterNot(f => man.paths(f.path))), idCol))
   }
+
+  /** [[append]]'s id check: one aggregate over the batch's ids and
+    * `live`'s finds an id that occurs more than once with at least
+    * one occurrence in the batch, and throws naming it.
+    */
+  private def requireFreshIds(batch: DataFrame, live: DataFrame,
+      idCol: String): Unit =
+    batch.select(col(idCol), lit(1L).as("in_batch"))
+      .unionByName(live.select(col(idCol), lit(0L).as("in_batch")))
+      .groupBy(col(idCol))
+      .agg(count(lit(1)).as("n"), sum("in_batch").as("n_batch"))
+      .filter(col("n_batch") >= 1L && col("n") > 1L)
+      // top-1 in one job over every partition (a bare limit may scan
+      // the mostly empty partitions in several), naming the least id
+      .orderBy(col(idCol)).limit(1).collect().headOption.foreach { r =>
+        val (n, nBatch) = (r.getLong(1), r.getLong(2))
+        throw new IllegalArgumentException(s"IndexStore.append: $idCol " +
+          s"${r.get(0)} " + (if (nBatch < n) "is already live in the index"
+          else s"occurs $n times in the batch") +
+          "; ids must be unique within a version")
+      }
 
   /** Remove tombstoned vectors from the index by rewriting ONLY the
     * cells that contain them — the delete half of the maintenance

@@ -115,7 +115,9 @@ object ProductSelect {
     * millions of footprints go through the grid-bucketed spatial join
     * (equi-join on cell id — no cross product), then ONE shuffle for
     * the (aoi, product) coverage aggregation, then a per-AOI window
-    * argmax with the recency tie-break.
+    * argmax with the recency tie-break. The score is the same
+    * `st_coverage_ratio` as [[scoreAndPick]]'s, so a zero-area AOI
+    * scores null here too instead of dividing by zero.
     *
     * @param aois columns (aoi_id, aoi_wkt); AOIs must be convex
     *             (bboxes in the reference)
@@ -131,8 +133,7 @@ object ProductSelect {
       .orderBy(desc("area_ratio"), desc("origin_date"))
     joined
       .withColumn("area_ratio",
-        expr("st_intersection_area(footprint_wkt, aoi_wkt)") /
-          expr("st_area(aoi_wkt)"))
+        call_function("st_coverage_ratio", col("footprint_wkt"), col("aoi_wkt")))
       // ONE exchange for the aggregation AND the window (round 21):
       // hash(aoi_id) satisfies the groupBy's (aoi_id, Id) clustering
       // (partitioning keys ⊆ grouping keys co-locates every group)

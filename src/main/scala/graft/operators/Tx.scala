@@ -16,9 +16,17 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * output path colliding with its input (`code/tx.py:117,135`). Here
   * each stage runs exactly once, composed functionally.
   *
-  * Scale: every stage is a per-row (or per-scene-group) map — chips
-  * partition by scene key, nothing global. Normalization (R1) is done
-  * at the pixel level inside each chip row.
+  * Scale: every stage is a per-band map, then [[stackScene]] per
+  * scene group, then a per-scene map — chips partition by scene key,
+  * nothing global. Normalization (R1) is done at the pixel level
+  * inside each chip row. Where those kernels run depends on the
+  * input: a distributed input (a band-file scan) runs them as a
+  * `groupByKey`/`mapGroups` plan, while a local one
+  * (`Dataset.isLocal`: a `LocalRelation`, as `createDataset(seq)`
+  * gives — the per-AOI flow's few band chips) runs them on the
+  * driver and returns `createDataset(scenes)`. That is safe because a
+  * local input's rows already sit in driver memory, and its collect
+  * launches no job; the output is the same on both paths.
   */
 object Tx {
 
@@ -34,33 +42,53 @@ object Tx {
     if (!uint8) c
     else c.copy(px = c.px.map(x => Raster.normalizeS2Scalar(x).toDouble))
 
-  /** R2: group to scenes, explicit band sort (never shuffle order). */
+  /** R2: one scene's bands, explicitly sorted (never shuffle order). */
+  def stackScene(scene: String, bands: Iterator[BandChip]): Scene = {
+    val sorted = bands.toSeq.sortBy(_.band)
+    Scene(scene, sorted.map(_.band), sorted.map(_.chip))
+  }
+
+  /** R2: group to scenes, one [[stackScene]] per group. */
   def bandStack(chips: Dataset[BandChip])(implicit s: SparkSession)
       : Dataset[Scene] = {
     import s.implicits._
-    chips.groupByKey(_.scene)
-      .mapGroups { (scene, it) =>
-        val sorted = it.toSeq.sortBy(_.band)
-        Scene(scene, sorted.map(_.band), sorted.map(_.chip))
-      }
+    chips.groupByKey(_.scene).mapGroups((scene, it) => stackScene(scene, it))
   }
+
+  /** `perBand` on every band chip → stack → `perChip` on every chip of
+    * every scene, on the driver for a local input and as a
+    * distributed plan otherwise (see Scale above).
+    */
+  private def process(chips: Dataset[BandChip], perBand: Chip => Chip,
+      perChip: Option[Chip => Chip])(implicit s: SparkSession)
+      : Dataset[Scene] = {
+    import s.implicits._
+    def finish(sc: Scene): Scene =
+      perChip.fold(sc)(f => sc.copy(chips = sc.chips.map(f)))
+    if (chips.isLocal) {
+      val scenes = chips.collect().toSeq
+        .map(bc => bc.copy(chip = perBand(bc.chip)))
+        .groupBy(_.scene).toSeq.sortBy(_._1)
+        .map { case (scene, bcs) => finish(stackScene(scene, bcs.iterator)) }
+      s.createDataset(scenes)
+    } else {
+      val stacked = bandStack(chips.map(bc => bc.copy(chip = perBand(bc.chip))))
+      if (perChip.isEmpty) stacked else stacked.map(finish)
+    }
+  }
+
+  private def resample(target: Option[(Int, Int, Double, Double, Double, Double)])
+      : Option[Chip => Chip] =
+    target.map { case (w, h, x1, y1, x2, y2) =>
+      (c: Chip) => Raster.resampleNearest(c, w, h, x1, y1, x2, y2) }
 
   /** `etl_process_tile` = normalize → stack → optional resample to a
     * target grid (`code/tx.py:110-121`).
     */
   def etlProcessTile(chips: Dataset[BandChip], uint8: Boolean,
       target: Option[(Int, Int, Double, Double, Double, Double)] = None)
-      (implicit s: SparkSession): Dataset[Scene] = {
-    import s.implicits._
-    val normalized = chips.map(bc => bc.copy(chip = normalizeIf(uint8)(bc.chip)))
-    val stacked = bandStack(normalized)
-    target match {
-      case None => stacked
-      case Some((w, h, x1, y1, x2, y2)) =>
-        stacked.map(sc => sc.copy(chips =
-          sc.chips.map(c => Raster.resampleNearest(c, w, h, x1, y1, x2, y2))))
-    }
-  }
+      (implicit s: SparkSession): Dataset[Scene] =
+    process(chips, normalizeIf(uint8), resample(target))
 
   /** `etl_process_by_polygon` = normalize → stack ONCE → clip →
     * optional reproject (`code/tx.py:123-138`, minus the double-stack
@@ -73,17 +101,10 @@ object Tx {
       clipBox: (Double, Double, Double, Double),
       target: Option[(Int, Int, Double, Double, Double, Double)] = None)
       (implicit s: SparkSession): Dataset[Scene] = {
-    import s.implicits._
     val (bx1, by1, bx2, by2) = clipBox
-    val clipped = etlProcessTile(
-      chips.map(bc => bc.copy(chip = Raster.clipByBox(bc.chip, bx1, by1, bx2, by2))),
-      uint8, None)
-    target match {
-      case None => clipped
-      case Some((w, h, x1, y1, x2, y2)) =>
-        clipped.map(sc => sc.copy(chips =
-          sc.chips.map(c => Raster.resampleNearest(c, w, h, x1, y1, x2, y2))))
-    }
+    process(chips,
+      c => normalizeIf(uint8)(Raster.clipByBox(c, bx1, by1, bx2, by2)),
+      resample(target))
   }
 
   /** The reference's FULL reproject flow: product-native UTM chips →
@@ -94,10 +115,7 @@ object Tx {
     */
   def etlProcessToWgs84(chips: Dataset[BandChip], uint8: Boolean,
       utmZone: Int, north: Boolean = true)
-      (implicit s: SparkSession): Dataset[Scene] = {
-    import s.implicits._
-    etlProcessTile(chips, uint8, None)
-      .map(sc => sc.copy(chips =
-        sc.chips.map(c => Raster.reprojectUtmToWgs84(c, utmZone, north))))
-  }
+      (implicit s: SparkSession): Dataset[Scene] =
+    process(chips, normalizeIf(uint8),
+      Some(c => Raster.reprojectUtmToWgs84(c, utmZone, north)))
 }

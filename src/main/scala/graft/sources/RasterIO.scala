@@ -105,30 +105,48 @@ object RasterIO {
     * handling). The default codec is the real GeoTIFF encoder
     * ([[GeoTiff.encode]], EPSG:4326 like `code/tx.py:57`); pass a
     * custom `encode` for other profiles. Returns the number of chips
-    * not copied (summed over tasks by an accumulator): a failed chip
-    * is still logged and skipped, never a job failure.
+    * not copied: a failed chip is still logged and skipped, never a
+    * job failure. A local input (`Dataset.isLocal`, e.g. the chips
+    * one AOI produced on the driver) is written in place by the same
+    * [[writeChipsTo]] loop without launching a job; any other input
+    * runs it per partition and sums the failures in an accumulator.
     */
   def writeChips(chips: Dataset[(String, Chip)], featureDir: String,
-      encode: Chip => Array[Byte] = GeoTiff.encode(_)): Long = {
-    val dir = featureDir
-    val failed = chips.sparkSession.sparkContext.longAccumulator
-    chips.foreachPartition { it: Iterator[(String, Chip)] =>
-      val tmp = Files.createTempDirectory("graft-chips")
+      encode: Chip => Array[Byte] = GeoTiff.encode(_)): Long =
+    if (chips.isLocal) writeChipsTo(chips.collect().iterator, featureDir, encode)
+    else {
+      val failed = chips.sparkSession.sparkContext.longAccumulator
+      chips.foreachPartition { it: Iterator[(String, Chip)] =>
+        failed.add(writeChipsTo(it, featureDir, encode))
+      }
+      failed.sum
+    }
+
+  /** [[writeChips]]' loop over one partition's chips: returns the
+    * number not copied. The temp file of each chip and the temp dir
+    * are deleted whatever happens, so no call leaves a `graft-chips*`
+    * directory behind.
+    */
+  private def writeChipsTo(it: Iterator[(String, Chip)], dir: String,
+      encode: Chip => Array[Byte]): Long = {
+    val tmp = Files.createTempDirectory("graft-chips")
+    var failed = 0L
+    try {
       Files.createDirectories(Paths.get(dir))
       it.foreach { case (uuid, chip) =>
+        val local = tmp.resolve(s"$uuid.tif")
         try {
-          val local = tmp.resolve(s"$uuid.tif")
           Files.write(local, encode(chip))
           Files.copy(local, Paths.get(dir, s"$uuid.tif"),
             StandardCopyOption.REPLACE_EXISTING)
         } catch { case e: Exception =>
           // reference semantics: log, don't fail the job (tx.py:94-96)
           System.err.println(s"[graft] chip $uuid not copied: ${e.getMessage}")
-          failed.add(1L)
-        }
+          failed += 1
+        } finally Files.deleteIfExists(local)
       }
-    }
-    failed.sum
+    } finally Files.deleteIfExists(tmp)
+    failed
   }
 }
 

@@ -621,8 +621,12 @@ class IndexStoreSpec extends AnyFunSuite with SharedSpark {
     val (encoded, _, _, out) = freshIndex("graft-index-diff-dup")
     val id = encoded.select("vec_id").limit(1).collect().head.getLong(0)
     val row = encoded.filter(col("vec_id") === id)
-    // append does not check id uniqueness: v2 holds `id` three times
-    IndexStore.append(row.unionByName(row), out)
+    // append refuses such a batch, so commit it below append's check:
+    // v2 holds `id` three times
+    val man = IndexStore.currentManifest(spark, out).get
+    IndexStore.commitWithRetry(spark, out, man, man.schema, man.model,
+      Set.empty, IndexStore.stageIn(row.unionByName(row), out, "vec_id",
+        "cell", "code"), fullReplace = false, validate = _ => ())
     val e = intercept[Exception] {
       IndexStore.diff(spark, out, 1L, 2L).collect()
     }
@@ -630,6 +634,41 @@ class IndexStoreSpec extends AnyFunSuite with SharedSpark {
       .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
     assert(msgs.exists(m => m.contains(s"vec_id $id has net change 2")),
       msgs.mkString(" | "))
+  }
+
+  test("append refuses a batch that repeats an id or re-adds a live " +
+      "one, names the id, and leaves the index as it was") {
+    val (encoded, _, _, out) = freshIndex("graft-index-append-dup")
+    val ids = encoded.select("vec_id").orderBy("vec_id").limit(2)
+      .collect().map(_.getLong(0))
+    val v1Rows = multiset(IndexStore.loadCodes(spark, out))
+    val v1Disk = diskFiles(out)
+    // re-adding a live id
+    val live = encoded.filter(col("vec_id") === ids(0))
+    val e1 = intercept[IllegalArgumentException] {
+      IndexStore.append(live, out)
+    }
+    assert(e1.getMessage.contains(s"vec_id ${ids(0)} is already live"),
+      e1.getMessage)
+    // nothing committed, and the refused batch's staged files are gone
+    assert(IndexStore.version(spark, out) == 1L)
+    assert(diskFiles(out) == v1Disk)
+    // an id repeated within the batch, after deleting it so that the
+    // only clash is inside the batch
+    import spark.implicits._
+    IndexStore.delete(spark, out, Seq(ids(1)).toDF("vec_id")) // v2
+    val v2Rows = multiset(IndexStore.loadCodes(spark, out))
+    val twice = encoded.filter(col("vec_id") === ids(1))
+    val e2 = intercept[IllegalArgumentException] {
+      IndexStore.append(twice.unionByName(twice), out)
+    }
+    assert(e2.getMessage.contains(s"vec_id ${ids(1)} occurs 2 times in the batch"),
+      e2.getMessage)
+    assert(IndexStore.version(spark, out) == 2L)
+    assert(multiset(IndexStore.loadCodes(spark, out)) == v2Rows)
+    // a clean re-add still lands
+    IndexStore.append(twice, out)
+    assert(multiset(IndexStore.loadCodes(spark, out)) == v1Rows)
   }
 
   test("restore rolls the head back to a retained version — a pure " +

@@ -154,6 +154,29 @@ class ProductSelectSpec extends AnyFunSuite with SharedSpark {
     assert(best.getAs[String]("uuid") == "newer")
   }
 
+  test("batch form scores a zero-area AOI null, like bestProduct, " +
+      "instead of dividing by zero") {
+    val s = spark
+    import s.implicits._
+    // a box whose hole is the box itself: it has no area, yet its
+    // outer ring meets the footprints, so it survives the join
+    val ring = "(1.3 43.5, 1.4 43.5, 1.4 43.6, 1.3 43.6, 1.3 43.5)"
+    val flat = s"POLYGON ($ring, $ring)"
+    val cat = catalog(Seq(
+      prod("older", "2023-03-10", "2.0", full),
+      prod("newer", "2023-09-10", "2.0", full)))
+    val batch = ProductSelect.bestPerAoi(spark, cat,
+      Seq(("A", aoi), ("Z", flat)).toDF("aoi_id", "aoi_wkt"), p)
+      .select("aoi_id", "uuid", "area_ratio").collect()
+      .map(r => r.getString(0) -> (r.getString(1), Option(r.get(2)))).toMap
+    val single = ProductSelect.bestProduct(spark, cat, flat, p)
+      .select("uuid", "area_ratio").head()
+    assert(single.isNullAt(1))
+    assert(batch("Z") == ((single.getString(0), None)))
+    assert(batch("A")._1 == "newer")
+    assert(math.abs(batch("A")._2.get.asInstanceOf[Double] - 1.0) < 1e-12)
+  }
+
   test("empty candidate set yields empty result (P9 guard shape)") {
     val best = ProductSelect.bestProduct(spark, catalog(Seq(
       prod("off", "2023-06-15", "1.0", away))), aoi, p)

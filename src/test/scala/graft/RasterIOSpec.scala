@@ -24,34 +24,61 @@ class RasterIOSpec extends AnyFunSuite with SharedSpark {
       ("B08", 10, "31TCJ")))
   }
 
+  /** The feature store after `writeChips` of `rows`, served in place
+    * (a local Dataset) and as a distributed job (a non-local copy):
+    * both must write the same files with the same bytes and count the
+    * same failures. Returns (failures, file name -> bytes).
+    */
+  private def writeBothPaths(rows: Seq[(String, Chip)],
+      encode: Chip => Array[Byte] = graft.sources.GeoTiff.encode(_))
+      : (Long, Map[String, Seq[Byte]]) = {
+    import spark.implicits._
+    val local = rows.toDS()
+    val distributed = local.repartition(2)
+    assert(local.isLocal && !distributed.isLocal)
+    val Seq(a, b) = Seq(local, distributed).map { ds =>
+      val out = Files.createTempDirectory("graft-store").toString
+      val failed = RasterIO.writeChips(ds, out, encode)
+      failed -> new java.io.File(out).list().map(n =>
+        n -> Files.readAllBytes(Paths.get(out, n)).toSeq).toMap
+    }
+    assert(a == b)
+    a
+  }
+
   test("S7/S8: chips land in the feature store as GeoTIFF <uuid>.tif") {
-    implicit val s = spark
-    import s.implicits._
-    val out = Files.createTempDirectory("graft-store").toString
     val chip = Chip(2, 1, 0, 0, 2, 1, 0.0, Array(1.5, 2.5))
-    RasterIO.writeChips(Seq(("u-1", chip), ("u-2", chip)).toDS(), out)
-    val files = new java.io.File(out).list().sorted.toSeq
-    assert(files == Seq("u-1.tif", "u-2.tif"))
-    val bytes = Files.readAllBytes(Paths.get(out, "u-1.tif"))
-    val (back, epsg) = graft.sources.GeoTiff.decode(bytes)
+    val (failed, files) = writeBothPaths(Seq(("u-1", chip), ("u-2", chip)))
+    assert(failed == 0L)
+    assert(files.keySet == Set("u-1.tif", "u-2.tif"))
+    val (back, epsg) = graft.sources.GeoTiff.decode(files("u-1.tif").toArray)
     assert(epsg == 4326)
     assert(back == chip.copy(px = back.px) && back.px.toSeq == Seq(1.5, 2.5))
   }
 
   test("S7/S8: a chip whose encode fails is counted and skipped, " +
       "the others still land") {
-    implicit val s = spark
-    import s.implicits._
-    val out = Files.createTempDirectory("graft-store").toString
     val ok = Chip(2, 1, 0, 0, 2, 1, 0.0, Array(1.5, 2.5))
     val bad = ok.copy(nodata = -1.0)
-    val failed = RasterIO.writeChips(
-      Seq(("u-ok", ok), ("u-bad", bad)).toDS().repartition(2), out,
+    val (failed, files) = writeBothPaths(Seq(("u-ok", ok), ("u-bad", bad)),
       encode = c =>
         if (c.nodata == -1.0) throw new java.io.IOException("disk full")
         else graft.sources.GeoTiff.encode(c))
     assert(failed == 1L)
-    assert(new java.io.File(out).list().toSeq == Seq("u-ok.tif"))
+    assert(files.keySet == Set("u-ok.tif"))
+  }
+
+  test("S7: writeChips leaves no graft-chips temp directory behind, " +
+      "on either path and when a chip fails") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def temps = tmp.list().count(_.startsWith("graft-chips"))
+    val before = temps
+    val ok = Chip(2, 1, 0, 0, 2, 1, 0.0, Array(1.5, 2.5))
+    writeBothPaths(Seq(("t-1", ok), ("t-2", ok), ("t-3", ok.copy(nodata = -1.0))),
+      encode = c =>
+        if (c.nodata == -1.0) throw new java.io.IOException("disk full")
+        else graft.sources.GeoTiff.encode(c))
+    assert(temps == before)
   }
 
   test("S7: GeoTIFF encode/decode round-trips bit-exactly with georeferencing") {

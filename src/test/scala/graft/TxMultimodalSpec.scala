@@ -5,6 +5,7 @@ import graft.functions.Raster.Chip
 import graft.operators.{Multimodal, Tx}
 import graft.operators.Multimodal.Media
 import graft.operators.Tx.BandChip
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,19 +17,37 @@ class TxMultimodalSpec extends AnyFunSuite with SharedSpark {
   private def chip(v: Double) =
     Chip(2, 2, 0, 0, 2, 2, -1.0, Array(v, v, v, v))
 
+  private def flat(scenes: Array[Tx.Scene]) = scenes.sortBy(_.scene).toSeq.map { sc =>
+    (sc.scene, sc.bands, sc.chips.map(c =>
+      (c.width, c.height, c.minx, c.miny, c.maxx, c.maxy, c.nodata, c.px.toSeq)))
+  }
+
+  /** `f` over a local input (served on the driver) and over a
+    * non-local copy of it (the distributed plan): both must give the
+    * same scenes, which are returned.
+    */
+  private def bothPaths(in: Dataset[BandChip])(
+      f: Dataset[BandChip] => Dataset[Tx.Scene]): Array[Tx.Scene] = {
+    val distributed = in.repartition(2)
+    assert(in.isLocal && !distributed.isLocal)
+    val got = f(in).collect()
+    assert(flat(got) == flat(f(distributed).collect()))
+    got
+  }
+
   test("etlProcessTile: normalize gate + stack once, sorted bands") {
     implicit val s = spark
     import s.implicits._
     val in = Seq(
       BandChip("sc1", "B08", chip(10000.0)),
       BandChip("sc1", "B02", chip(5000.0))).toDS()
-    val out = Tx.etlProcessTile(in, uint8 = true).collect()
+    val out = bothPaths(in)(Tx.etlProcessTile(_, uint8 = true))
     assert(out.length == 1)
     assert(out(0).bands == Seq("B02", "B08"))
     assert(out(0).chips(0).px.toSeq == Seq(127.0, 127.0, 127.0, 127.0))
     assert(out(0).chips(1).px.toSeq == Seq(255.0, 255.0, 255.0, 255.0))
     // uint8=false leaves pixels untouched (gate at tx.py:111-114)
-    val raw = Tx.etlProcessTile(in, uint8 = false).collect()
+    val raw = bothPaths(in)(Tx.etlProcessTile(_, uint8 = false))
     assert(raw(0).chips(0).px.toSeq == Seq(5000.0, 5000.0, 5000.0, 5000.0))
   }
 
@@ -38,9 +57,9 @@ class TxMultimodalSpec extends AnyFunSuite with SharedSpark {
     val base = Chip(4, 4, 0, 0, 4, 4, -1.0,
       Array.tabulate(16)(_.toDouble))
     val in = Seq(BandChip("sc1", "B02", base)).toDS()
-    val out = Tx.etlProcessByPolygon(in, uint8 = false,
+    val out = bothPaths(in)(Tx.etlProcessByPolygon(_, uint8 = false,
       clipBox = (1, 1, 3, 3),
-      target = Some((2, 2, 1, 1, 3, 3))).collect()
+      target = Some((2, 2, 1, 1, 3, 3))))
     assert(out.length == 1)
     val c = out(0).chips(0)
     assert(c.width == 2 && c.height == 2)
@@ -58,13 +77,9 @@ class TxMultimodalSpec extends AnyFunSuite with SharedSpark {
         -1.0, Array.fill(w * h)(rng.nextInt(12000).toDouble)))
     }
     val box = (2.5 + rng.nextDouble(), 3.0 + rng.nextDouble(), 7.0, 9.5)
-    def flat(scenes: Array[Tx.Scene]) = scenes.sortBy(_.scene).toSeq.map { sc =>
-      (sc.scene, sc.bands, sc.chips.map(c =>
-        (c.width, c.height, c.minx, c.miny, c.maxx, c.maxy, c.nodata, c.px.toSeq)))
-    }
     for (uint8 <- Seq(true, false)) {
-      val got = Tx.etlProcessByPolygon(in.toDS(), uint8, box).collect()
-      val want = Tx.etlProcessTile(in.toDS(), uint8).collect().map(sc =>
+      val got = bothPaths(in.toDS())(Tx.etlProcessByPolygon(_, uint8, box))
+      val want = bothPaths(in.toDS())(Tx.etlProcessTile(_, uint8)).map(sc =>
         sc.copy(chips = sc.chips.map(c =>
           Raster.clipByBox(c, box._1, box._2, box._3, box._4))))
       assert(flat(got) == flat(want), s"uint8=$uint8")
@@ -115,7 +130,7 @@ class TxMultimodalSpec extends AnyFunSuite with SharedSpark {
     val in = Seq(
       Tx.BandChip("sceneA", "B03", utmChip),
       Tx.BandChip("sceneA", "B02", utmChip)).toDS()
-    val out = Tx.etlProcessToWgs84(in, uint8 = false, utmZone = 31).collect()
+    val out = bothPaths(in)(Tx.etlProcessToWgs84(_, uint8 = false, utmZone = 31))
     assert(out.length == 1 && out.head.bands == Seq("B02", "B03"))
     val warped = out.head.chips.head
     // bounds landed in lon/lat around the Toulouse AOI
