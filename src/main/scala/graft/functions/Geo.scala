@@ -331,22 +331,78 @@ object Geo {
       */
     def wgs84ToUtm(lon: Double, lat: Double, zone: Int,
         north: Boolean = true): (Double, Double) = {
-      val phi = math.toRadians(lat)
+      val t = conformalT(math.toRadians(lat))
       val dLam = math.toRadians(lon - utmCentralMeridian(zone))
-      val c = 2.0 * math.sqrt(n) / (1.0 + n)
-      val t = math.sinh(atanh(math.sin(phi)) - c * atanh(c * math.sin(phi)))
-      val xiP = math.atan2(t, math.cos(dLam))
-      val etaP = atanh(math.sin(dLam) / math.sqrt(1.0 + t * t))
-      var xi = xiP; var eta = etaP
-      var j = 1
-      while (j <= 3) {
-        xi += alpha(j - 1) * math.sin(2.0 * j * xiP) * math.cosh(2.0 * j * etaP)
-        eta += alpha(j - 1) * math.cos(2.0 * j * xiP) * math.sinh(2.0 * j * etaP)
-        j += 1
+      val e = new Array[Double](1); val nn = new Array[Double](1)
+      krueger(t, math.sqrt(1.0 + t * t), math.sin(dLam), math.cos(dLam),
+        north, e, nn, 0)
+      (e(0), nn(0))
+    }
+
+    /** [[wgs84ToUtm]] over the grid `lons` × `lats`: entry
+      * `r * lons.length + c` of the returned (eastings, northings) is
+      * the image of (lons(c), lats(r)), bit for bit. The terms that
+      * depend only on latitude (the conformal latitude's `t` and
+      * `sqrt(1 + t²)`) are computed once per row, those that depend
+      * only on longitude (`sin`/`cos Δλ`) once per column; only the
+      * Krüger series runs per point.
+      */
+    def wgs84ToUtmGrid(lons: Array[Double], lats: Array[Double], zone: Int,
+        north: Boolean = true): (Array[Double], Array[Double]) = {
+      val w = lons.length
+      val sinL = new Array[Double](w); val cosL = new Array[Double](w)
+      var c = 0
+      while (c < w) {
+        val dLam = math.toRadians(lons(c) - utmCentralMeridian(zone))
+        sinL(c) = math.sin(dLam); cosL(c) = math.cos(dLam)
+        c += 1
       }
-      val e = E0 + k0 * A * eta
-      val nn = k0 * A * xi + (if (north) 0.0 else 10000000.0)
+      val e = new Array[Double](w * lats.length)
+      val nn = new Array[Double](w * lats.length)
+      var r = 0
+      while (r < lats.length) {
+        val t = conformalT(math.toRadians(lats(r)))
+        val root = math.sqrt(1.0 + t * t)
+        c = 0
+        while (c < w) {
+          krueger(t, root, sinL(c), cosL(c), north, e, nn, r * w + c)
+          c += 1
+        }
+        r += 1
+      }
       (e, nn)
+    }
+
+    private val conformalC = 2.0 * math.sqrt(n) / (1.0 + n)
+
+    /** `t = sinh(atanh(sin φ) − c·atanh(c·sin φ))` of the conformal
+      * latitude, for φ in radians.
+      */
+    private def conformalT(phi: Double): Double =
+      math.sinh(atanh(math.sin(phi)) - conformalC * atanh(conformalC * math.sin(phi)))
+
+    /** The Krüger series from (t, sqrt(1 + t²), sin Δλ, cos Δλ) to
+      * (easting, northing), written to `e(k)` and `nn(k)`. Its
+      * sin/cos(2jξ′) and sinh/cosh(2jη′) terms for j = 2, 3 come from
+      * the j = 1 values by the angle-addition identities (4
+      * transcendental calls instead of 12); they are scaled by
+      * α₂ ≈ 7.6e-7 and α₃ ≈ 1.2e-9, so the identities' rounding stays
+      * far below a nanometre.
+      */
+    private def krueger(t: Double, root: Double, sinL: Double, cosL: Double,
+        north: Boolean, e: Array[Double], nn: Array[Double], k: Int): Unit = {
+      val xiP = math.atan2(t, cosL)
+      val etaP = atanh(sinL / root)
+      val s2 = math.sin(2.0 * xiP); val c2 = math.cos(2.0 * xiP)
+      val sh2 = math.sinh(2.0 * etaP); val ch2 = math.cosh(2.0 * etaP)
+      val s4 = 2.0 * s2 * c2; val c4 = c2 * c2 - s2 * s2
+      val sh4 = 2.0 * sh2 * ch2; val ch4 = ch2 * ch2 + sh2 * sh2
+      val s6 = s2 * c4 + c2 * s4; val c6 = c2 * c4 - s2 * s4
+      val sh6 = sh2 * ch4 + ch2 * sh4; val ch6 = ch2 * ch4 + sh2 * sh4
+      val xi = xiP + alpha(0) * s2 * ch2 + alpha(1) * s4 * ch4 + alpha(2) * s6 * ch6
+      val eta = etaP + alpha(0) * c2 * sh2 + alpha(1) * c4 * sh4 + alpha(2) * c6 * sh6
+      e(k) = E0 + k0 * A * eta
+      nn(k) = k0 * A * xi + (if (north) 0.0 else 10000000.0)
     }
 
     /** UTM (easting, northing, zone) → WGS84 (lon, lat) degrees. */

@@ -19,5 +19,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     // naive st_intersects theta-join → grid-bucketed equi-join
     ext.injectOptimizerRule(_ => graft.plans.SpatialJoinRule)
+    // typed map/filter over a LocalRelation → LocalRelation
+    ext.injectOptimizerRule(_ => graft.plans.LocalObjectFold)
   }
 }

@@ -150,25 +150,40 @@ object Raster {
   def warpNearest(c: Chip, outW: Int, outH: Int,
       ominx: Double, ominy: Double, omaxx: Double, omaxy: Double,
       invMap: (Double, Double) => (Double, Double)): Chip = {
-    val out = Array.fill(outW * outH)(c.nodata)
+    val sx = new Array[Double](outW * outH)
+    val sy = new Array[Double](outW * outH)
     val opw = (omaxx - ominx) / outW
     val oph = (omaxy - ominy) / outH
-    val ipw = (c.maxx - c.minx) / c.width
-    val iph = (c.maxy - c.miny) / c.height
     var r = 0
     while (r < outH) {
       val oy = omaxy - (r + 0.5) * oph
       var cc = 0
       while (cc < outW) {
-        val ox = ominx + (cc + 0.5) * opw
-        val (sx, sy) = invMap(ox, oy)
-        val ic = math.floor((sx - c.minx) / ipw).toInt
-        val ir = math.floor((c.maxy - sy) / iph).toInt
-        if (ir >= 0 && ir < c.height && ic >= 0 && ic < c.width)
-          out(r * outW + cc) = c.px(ir * c.width + ic)
+        val (x, y) = invMap(ominx + (cc + 0.5) * opw, oy)
+        sx(r * outW + cc) = x; sy(r * outW + cc) = y
         cc += 1
       }
       r += 1
+    }
+    sampleNearest(c, outW, outH, ominx, ominy, omaxx, omaxy, sx, sy)
+  }
+
+  /** The output grid whose pixel k samples the source pixel under the
+    * source-CRS point (sx(k), sy(k)), or nodata outside the source.
+    */
+  private def sampleNearest(c: Chip, outW: Int, outH: Int,
+      ominx: Double, ominy: Double, omaxx: Double, omaxy: Double,
+      sx: Array[Double], sy: Array[Double]): Chip = {
+    val out = Array.fill(outW * outH)(c.nodata)
+    val ipw = (c.maxx - c.minx) / c.width
+    val iph = (c.maxy - c.miny) / c.height
+    var k = 0
+    while (k < out.length) {
+      val ic = math.floor((sx(k) - c.minx) / ipw).toInt
+      val ir = math.floor((c.maxy - sy(k)) / iph).toInt
+      if (ir >= 0 && ir < c.height && ic >= 0 && ic < c.width)
+        out(k) = c.px(ir * c.width + ic)
+      k += 1
     }
     Chip(outW, outH, ominx, ominy, omaxx, omaxy, c.nodata, out)
   }
@@ -178,16 +193,24 @@ object Raster {
     * `code/tx.py:49-63`). Output bounds = lon/lat envelope of the
     * source corners; pixel counts carry over (≈ preserved
     * resolution); sampling is nearest via the exact inverse (WGS84 →
-    * UTM) point transform.
+    * UTM) point transform. The output grid's pixel centres form a
+    * lon × lat product grid, so the inverse map runs as the separable
+    * [[Geo.Crs.wgs84ToUtmGrid]], at a fraction of the transcendental
+    * calls; its points are `wgs84ToUtm`'s, so the output equals
+    * [[warpNearest]] with `wgs84ToUtm`, bit for bit.
     */
   def reprojectUtmToWgs84(c: Chip, zone: Int, north: Boolean = true): Chip = {
     val corners = Seq((c.minx, c.miny), (c.minx, c.maxy),
       (c.maxx, c.miny), (c.maxx, c.maxy))
       .map { case (e, n) => Geo.Crs.utmToWgs84(e, n, zone, north) }
-    val lons = corners.map(_._1); val lats = corners.map(_._2)
-    warpNearest(c, c.width, c.height,
-      lons.min, lats.min, lons.max, lats.max,
-      (lon, lat) => Geo.Crs.wgs84ToUtm(lon, lat, zone, north))
+    val (ominx, omaxx) = (corners.map(_._1).min, corners.map(_._1).max)
+    val (ominy, omaxy) = (corners.map(_._2).min, corners.map(_._2).max)
+    val opw = (omaxx - ominx) / c.width
+    val oph = (omaxy - ominy) / c.height
+    val lons = Array.tabulate(c.width)(cc => ominx + (cc + 0.5) * opw)
+    val lats = Array.tabulate(c.height)(r => omaxy - (r + 0.5) * oph)
+    val (sx, sy) = Geo.Crs.wgs84ToUtmGrid(lons, lats, zone, north)
+    sampleNearest(c, c.width, c.height, ominx, ominy, omaxx, omaxy, sx, sy)
   }
 
   // -----------------------------------------------------------------

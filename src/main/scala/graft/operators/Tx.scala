@@ -2,7 +2,8 @@ package graft.operators
 
 import graft.functions.Raster
 import graft.functions.Raster.Chip
-import org.apache.spark.sql.{Dataset, SparkSession}
+import graft.plans.LocalObjectFold
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 
 /** Pipeline composition (SURVEY.md §2.10 R6): the reference's `Tx`
   * stage graph (`/root/reference/code/tx.py:98-138`) as typed Dataset
@@ -22,11 +23,19 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * inside each chip row. Where those kernels run depends on the
   * input: a distributed input (a band-file scan) runs them as a
   * `groupByKey`/`mapGroups` plan, while a local one
-  * (`Dataset.isLocal`: a `LocalRelation`, as `createDataset(seq)`
-  * gives — the per-AOI flow's few band chips) runs them on the
-  * driver and returns `createDataset(scenes)`. That is safe because a
-  * local input's rows already sit in driver memory, and its collect
-  * launches no job; the output is the same on both paths.
+  * ([[LocalObjectFold.servesInPlace]]: its optimized plan is a
+  * `LocalRelation`, as `createDataset(seq)` gives — the per-AOI
+  * flow's few band chips — also behind typed `map`/`filter`s) runs
+  * them on the driver and returns `createDataset(scenes)`. That is
+  * safe because a local input's rows already sit in driver memory,
+  * and its collect launches no job; the output is the same on both
+  * paths. Every entry installs [[LocalObjectFold]] in its session, so
+  * a caller's own typed `map`/`filter` over that local result (the
+  * AOI flow's reproject map) folds into a `LocalRelation` too, and its
+  * collect launches no job either. That changes how the caller's
+  * session runs typed operators from then on: every typed
+  * `map`/`filter` over any local Dataset in it runs serially on the
+  * driver while Spark optimizes the plan.
   */
 object Tx {
 
@@ -34,6 +43,11 @@ object Tx {
   case class BandChip(scene: String, band: String, chip: Chip)
   /** One stacked scene: bands in lexicographic band order (O4). */
   case class Scene(scene: String, bands: Seq[String], chips: Seq[Chip])
+
+  // Built once: deriving a product encoder reflects over the case
+  // class, a cost every call paid with `s.implicits._`.
+  private implicit val bandChipEncoder: Encoder[BandChip] = Encoders.product[BandChip]
+  private implicit val sceneEncoder: Encoder[Scene] = Encoders.product[Scene]
 
   /** R1 gate: normalize iff output format is UINT8
     * (`conf/config.yaml:32`, gate at `code/tx.py:111-114`).
@@ -50,10 +64,9 @@ object Tx {
 
   /** R2: group to scenes, one [[stackScene]] per group. */
   def bandStack(chips: Dataset[BandChip])(implicit s: SparkSession)
-      : Dataset[Scene] = {
-    import s.implicits._
-    chips.groupByKey(_.scene).mapGroups((scene, it) => stackScene(scene, it))
-  }
+      : Dataset[Scene] =
+    chips.groupByKey(_.scene)(Encoders.STRING)
+      .mapGroups((scene, it) => stackScene(scene, it))
 
   /** `perBand` on every band chip → stack → `perChip` on every chip of
     * every scene, on the driver for a local input and as a
@@ -62,10 +75,10 @@ object Tx {
   private def process(chips: Dataset[BandChip], perBand: Chip => Chip,
       perChip: Option[Chip => Chip])(implicit s: SparkSession)
       : Dataset[Scene] = {
-    import s.implicits._
+    LocalObjectFold.install(s)
     def finish(sc: Scene): Scene =
       perChip.fold(sc)(f => sc.copy(chips = sc.chips.map(f)))
-    if (chips.isLocal) {
+    if (LocalObjectFold.servesInPlace(chips)) {
       val scenes = chips.collect().toSeq
         .map(bc => bc.copy(chip = perBand(bc.chip)))
         .groupBy(_.scene).toSeq.sortBy(_._1)

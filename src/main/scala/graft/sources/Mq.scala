@@ -1,7 +1,5 @@
 package graft.sources
 
-import scala.collection.mutable.ArrayBuffer
-
 /** The MQ binary arithmetic coder of JPEG 2000 (ITU-T T.800 Annex C;
   * the same coder as JBIG2's T.88) — the entropy core under EBCOT
   * tier-1. Implemented from the spec's flowcharts (C.2 encoder, C.3
@@ -132,23 +130,31 @@ object Mq {
     * streams (the default single-segment code-block form).
     */
   final class Encoder {
-    private val out = ArrayBuffer[Int](0) // leading scratch byte, dropped
+    private var out = new Array[Byte](64) // out(0): scratch byte, dropped
+    private var n = 1
     private var c = 0
     private var ct = 12
     private var a = 0x8000
 
+    private def last: Int = out(n - 1) & 0xff
+
+    private def emit(b: Int): Unit = {
+      if (n == out.length) out = java.util.Arrays.copyOf(out, 2 * n)
+      out(n) = b.toByte; n += 1
+    }
+
     private def byteOut(): Unit = {
-      if (out.last == 0xff) {
-        out += (c >>> 20) & 0xff; c &= 0xfffff; ct = 7
+      if (last == 0xff) {
+        emit((c >>> 20) & 0xff); c &= 0xfffff; ct = 7
       } else if (c < 0x8000000) {
-        out += (c >>> 19) & 0xff; c &= 0x7ffff; ct = 8
+        emit((c >>> 19) & 0xff); c &= 0x7ffff; ct = 8
       } else {
-        out(out.length - 1) += 1 // carry
-        if (out.last == 0xff) {
+        out(n - 1) = (last + 1).toByte // carry; last < 0xff here
+        if (last == 0xff) {
           c &= 0x7ffffff
-          out += (c >>> 20) & 0xff; c &= 0xfffff; ct = 7
+          emit((c >>> 20) & 0xff); c &= 0xfffff; ct = 7
         } else {
-          out += (c >>> 19) & 0xff; c &= 0x7ffff; ct = 8
+          emit((c >>> 19) & 0xff); c &= 0x7ffff; ct = 8
         }
       }
     }
@@ -192,9 +198,8 @@ object Mq {
       if (c >= tempc) c -= 0x8000
       c <<= ct; byteOut()
       c <<= ct; byteOut()
-      require(out.head == 0, "carry escaped the MQ codeword")
-      val end = if (out.last == 0xff) out.length - 1 else out.length
-      out.slice(1, end).map(_.toByte).toArray
+      require(out(0) == 0, "carry escaped the MQ codeword")
+      java.util.Arrays.copyOfRange(out, 1, if (last == 0xff) n - 1 else n)
     }
   }
 }

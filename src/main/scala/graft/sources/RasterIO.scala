@@ -1,9 +1,11 @@
 package graft.sources
 
 import graft.functions.Raster.Chip
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.plans.LocalObjectFold
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import scala.collection.immutable.ListMap
 
 /** Raster file I/O stages (SURVEY.md §2.1 S5–S9), Spark-shaped:
   * distributed scans via the binaryFile source, side-effecting
@@ -19,17 +21,17 @@ object RasterIO {
     * `/root/reference/code/imagery_store.py:118-128`). Pixels decode
     * with [[decodeBandPixels]] (the in-house T.800 path, [[Jp2]]).
     */
-  def readBandFiles(spark: SparkSession, glob: String): DataFrame =
+  def readBandFiles(spark: SparkSession, glob: String): DataFrame = {
+    val file = element_at(split(col("path"), "/"), -1)
     spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.jp2")
       .load(glob)
-      .withColumn("file", element_at(split(col("path"), "/"), -1))
-      .withColumn("band",
-        regexp_extract(col("file"), "_(B[0-9A-Z]{2})_", 1))
-      .withColumn("resolution_m",
-        regexp_extract(col("file"), "_([0-9]+)m", 1).cast("int"))
-      .withColumn("tile",
-        regexp_extract(col("file"), "(?:^|_)T([0-9A-Z]{5})_", 1))
+      .withColumns(ListMap(
+        "file" -> file,
+        "band" -> regexp_extract(file, "_(B[0-9A-Z]{2})_", 1),
+        "resolution_m" -> regexp_extract(file, "_([0-9]+)m", 1).cast("int"),
+        "tile" -> regexp_extract(file, "(?:^|_)T([0-9A-Z]{5})_", 1)))
+  }
 
   /** S5 — distributed pixel decode over a [[readBandFiles]] scan:
     * adds (width, height, pixels) per band file via [[Jp2.decode]]
@@ -40,18 +42,31 @@ object RasterIO {
     * map, one file per task slot, no shuffle.
     */
   def decodeBandPixels(bands: DataFrame): DataFrame =
-    bands
-      .withColumn("decoded", decodeUdf(col("content")))
-      .withColumn("width", col("decoded._1"))
-      .withColumn("height", col("decoded._2"))
-      .withColumn("pixels", col("decoded._3"))
-      .drop("decoded")
+    unpack(bands, decodeUdf(col("content")), "width", "height", "pixels")
 
-  /** Built once: making a UDF derives its encoders by reflection. */
+  // Built once: making a UDF derives its encoders by reflection.
   private val decodeUdf = udf { content: Array[Byte] =>
     val (h, px) = Jp2.decode(content)
     (h.width, h.height, px)
   }
+  private val decodeReducedUdf = udf { (content: Array[Byte], discard: Int) =>
+    val (_, wr, hr, px) = Jp2.decodeReduced(content, discard)
+    (wr, hr, px)
+  }
+  private val decodeAllUdf = udf { content: Array[Byte] =>
+    val (h, planes) = Jp2.decodeAll(content)
+    planes.zipWithIndex.map { case (px, c) => (c, h.width, h.height, px) }
+  }
+
+  /** `rows` plus the fields of the tuple struct `decoded` as columns
+    * `names`, in one projection (one eager analysis). The decoder runs
+    * once per row: the three field reads share one UDF call through
+    * subexpression elimination.
+    */
+  private def unpack(rows: DataFrame, decoded: Column, names: String*)
+      : DataFrame =
+    rows.withColumns(ListMap(names.zipWithIndex.map { case (n, i) =>
+      n -> decoded.getField(s"_${i + 1}") }: _*))
 
   /** S5, overview form: decode every band at 1/2^discard scale via
     * [[Jp2.decodeReduced]] — the engine-surface twin of a raster
@@ -62,18 +77,9 @@ object RasterIO {
     * tier-1 cost, and the downstream schema is identical to
     * [[decodeBandPixels]] with reduced width/height.
     */
-  def decodeBandPixelsReduced(bands: DataFrame, discard: Int): DataFrame = {
-    val dec = udf { content: Array[Byte] =>
-      val (_, wr, hr, px) = Jp2.decodeReduced(content, discard)
-      (wr, hr, px)
-    }
-    bands
-      .withColumn("decoded", dec(col("content")))
-      .withColumn("width", col("decoded._1"))
-      .withColumn("height", col("decoded._2"))
-      .withColumn("pixels", col("decoded._3"))
-      .drop("decoded")
-  }
+  def decodeBandPixelsReduced(bands: DataFrame, discard: Int): DataFrame =
+    unpack(bands, decodeReducedUdf(col("content"), lit(discard)),
+      "width", "height", "pixels")
 
   /** S5, multi-component form (round 12): decode EVERY component of
     * each file and explode to one row per component — the shape for
@@ -84,19 +90,9 @@ object RasterIO {
     * file per task, no shuffle; the explode multiplies rows, never
     * re-reads the payload (the file decodes once per task).
     */
-  def decodeAllBandPixels(bands: DataFrame): DataFrame = {
-    val dec = udf { content: Array[Byte] =>
-      val (h, planes) = Jp2.decodeAll(content)
-      planes.zipWithIndex.map { case (px, c) => (c, h.width, h.height, px) }
-    }
-    bands
-      .withColumn("comp", explode(dec(col("content"))))
-      .withColumn("component", col("comp._1"))
-      .withColumn("width", col("comp._2"))
-      .withColumn("height", col("comp._3"))
-      .withColumn("pixels", col("comp._4"))
-      .drop("comp")
-  }
+  def decodeAllBandPixels(bands: DataFrame): DataFrame =
+    unpack(bands.withColumn("comp", explode(decodeAllUdf(col("content")))),
+      col("comp"), "component", "width", "height", "pixels").drop("comp")
 
   /** S7 — partition-local raster sink: each task writes its chips as
     * `<uuid>.tif` into a task-local temp dir, then promotes them into
@@ -106,14 +102,22 @@ object RasterIO {
     * ([[GeoTiff.encode]], EPSG:4326 like `code/tx.py:57`); pass a
     * custom `encode` for other profiles. Returns the number of chips
     * not copied: a failed chip is still logged and skipped, never a
-    * job failure. A local input (`Dataset.isLocal`, e.g. the chips
-    * one AOI produced on the driver) is written in place by the same
-    * [[writeChipsTo]] loop without launching a job; any other input
-    * runs it per partition and sums the failures in an accumulator.
+    * job failure. A local input
+    * ([[graft.plans.LocalObjectFold.servesInPlace]], e.g. the chips
+    * one AOI produced on the driver, also behind typed
+    * `map`/`filter`s, which the installed [[graft.plans.LocalObjectFold]]
+    * folds) is written in place by the same [[writeChipsTo]] loop
+    * without launching a job; any other input runs it per partition
+    * and sums the failures in an accumulator. Installing the rule
+    * changes how the caller's session runs typed operators from then
+    * on: every typed `map`/`filter` over any local Dataset in it runs
+    * serially on the driver while Spark optimizes the plan.
     */
   def writeChips(chips: Dataset[(String, Chip)], featureDir: String,
-      encode: Chip => Array[Byte] = GeoTiff.encode(_)): Long =
-    if (chips.isLocal) writeChipsTo(chips.collect().iterator, featureDir, encode)
+      encode: Chip => Array[Byte] = GeoTiff.encode(_)): Long = {
+    LocalObjectFold.install(chips.sparkSession)
+    if (LocalObjectFold.servesInPlace(chips))
+      writeChipsTo(chips.collect().iterator, featureDir, encode)
     else {
       val failed = chips.sparkSession.sparkContext.longAccumulator
       chips.foreachPartition { it: Iterator[(String, Chip)] =>
@@ -121,6 +125,7 @@ object RasterIO {
       }
       failed.sum
     }
+  }
 
   /** [[writeChips]]' loop over one partition's chips: returns the
     * number not copied. The temp file of each chip and the temp dir

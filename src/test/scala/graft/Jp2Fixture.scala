@@ -39,60 +39,42 @@ object Jp2Fixture {
       if (x < 0 || y < 0 || x >= w || y >= h) 0
       else if (sig(y * w + x)) 1 else 0
 
-    def neighborSums(x: Int, y: Int): (Int, Int, Int) = (
-      sigAt(x - 1, y) + sigAt(x + 1, y),
-      sigAt(x, y - 1) + sigAt(x, y + 1),
+    // significant neighbours: horizontal, vertical, diagonal
+    private def hSum(x: Int, y: Int): Int = sigAt(x - 1, y) + sigAt(x + 1, y)
+    private def vSum(x: Int, y: Int): Int = sigAt(x, y - 1) + sigAt(x, y + 1)
+    private def dSum(x: Int, y: Int): Int =
       sigAt(x - 1, y - 1) + sigAt(x + 1, y - 1) +
-        sigAt(x - 1, y + 1) + sigAt(x + 1, y + 1))
+        sigAt(x - 1, y + 1) + sigAt(x + 1, y + 1)
 
-    def zcCx(x: Int, y: Int): Int = {
-      val (hh, vv, dd) = neighborSums(x, y)
-      CxZc + zcContext(band, hh, vv, dd)
-    }
+    def zcCx(x: Int, y: Int): Int =
+      CxZc + zcContext(band, hSum(x, y), vSum(x, y), dSum(x, y))
 
     private def signContrib(x: Int, y: Int): Int =
       if (x < 0 || y < 0 || x >= w || y >= h || !sig(y * w + x)) 0
       else if (neg(y * w + x)) -1 else 1
 
-    def scCx(x: Int, y: Int): (Int, Int) = {
-      val clamp = (s: Int) => math.max(-1, math.min(1, s))
+    private def clamp(s: Int): Int = math.max(-1, math.min(1, s))
+
+    def scCx(x: Int, y: Int): (Int, Int) =
       scContext(
         clamp(signContrib(x - 1, y) + signContrib(x + 1, y)),
         clamp(signContrib(x, y - 1) + signContrib(x, y + 1)))
-    }
 
-    def mrCx(x: Int, y: Int): Int = {
-      val i = y * w + x
-      if (refined(i)) CxMr + 2
-      else {
-        val (hh, vv, dd) = neighborSums(x, y)
-        if (hh + vv + dd > 0) CxMr + 1 else CxMr
-      }
-    }
+    def mrCx(x: Int, y: Int): Int =
+      if (refined(y * w + x)) CxMr + 2
+      else if (hSum(x, y) + vSum(x, y) + dSum(x, y) > 0) CxMr + 1
+      else CxMr
 
     /** Column starts a full 4-row stripe usable for run-length mode? */
-    def rlEligible(x: Int, y0: Int): Boolean =
-      y0 + 3 < h && (0 until 4).forall { k =>
-        val i = (y0 + k) * w + x
-        !sig(i) && !visited(i) && zcCx(x, y0 + k) == CxZc
+    def rlEligible(x: Int, y0: Int): Boolean = {
+      var ok = y0 + 3 < h
+      var y = y0
+      while (ok && y < y0 + 4) {
+        val i = y * w + x
+        ok = !sig(i) && !visited(i) && zcCx(x, y) == CxZc
+        y += 1
       }
-  }
-
-  /** Iterate the tier-1 scan order: stripes of 4 rows, columns
-    * left-to-right within a stripe, rows top-to-bottom within a
-    * column. `f(x, y, stripeTop)`.
-    */
-  private def scan(w: Int, h: Int)(f: (Int, Int, Int) => Unit): Unit = {
-    var y0 = 0
-    while (y0 < h) {
-      var x = 0
-      while (x < w) {
-        var y = y0
-        val yEnd = math.min(y0 + 4, h)
-        while (y < yEnd) { f(x, y, y0); y += 1 }
-        x += 1
-      }
-      y0 += 4
+      ok
     }
   }
 
@@ -137,62 +119,94 @@ object Jp2Fixture {
     mq.encode(cx, sc, (if (blk.neg(i)) 1 else 0) ^ xor)
   }
 
+  // The three passes walk the tier-1 scan order: stripes of 4 rows,
+  // columns left-to-right within a stripe, rows top-to-bottom within
+  // a column.
+
   private def spp(mq: Mq.Encoder, cx: Mq.Contexts, blk: Block,
-      mag: Array[Int], coeffs: Array[Int], plane: Int): Unit =
-    scan(blk.w, blk.h) { (x, y, _) =>
-      val i = y * blk.w + x
-      if (!blk.sig(i)) {
-        val zc = blk.zcCx(x, y)
-        if (zc != Ebcot.CxZc) {
-          blk.visited(i) = true
-          val bit = (mag(i) >>> plane) & 1
-          mq.encode(cx, zc, bit)
-          if (bit == 1) {
-            encodeSign(mq, cx, blk, coeffs, x, y)
+      mag: Array[Int], coeffs: Array[Int], plane: Int): Unit = {
+    var y0 = 0
+    while (y0 < blk.h) {
+      val yEnd = math.min(y0 + 4, blk.h)
+      var x = 0
+      while (x < blk.w) {
+        var y = y0
+        while (y < yEnd) {
+          val i = y * blk.w + x
+          if (!blk.sig(i)) {
+            val zc = blk.zcCx(x, y)
+            if (zc != Ebcot.CxZc) {
+              blk.visited(i) = true
+              val bit = (mag(i) >>> plane) & 1
+              mq.encode(cx, zc, bit)
+              if (bit == 1) encodeSign(mq, cx, blk, coeffs, x, y)
+            }
           }
+          y += 1
         }
+        x += 1
       }
+      y0 += 4
     }
+  }
 
   private def mrp(mq: Mq.Encoder, cx: Mq.Contexts, blk: Block,
-      mag: Array[Int], plane: Int): Unit =
-    scan(blk.w, blk.h) { (x, y, _) =>
-      val i = y * blk.w + x
-      if (blk.sig(i) && !blk.visited(i)) {
-        mq.encode(cx, blk.mrCx(x, y), (mag(i) >>> plane) & 1)
-        blk.refined(i) = true
+      mag: Array[Int], plane: Int): Unit = {
+    var y0 = 0
+    while (y0 < blk.h) {
+      val yEnd = math.min(y0 + 4, blk.h)
+      var x = 0
+      while (x < blk.w) {
+        var y = y0
+        while (y < yEnd) {
+          val i = y * blk.w + x
+          if (blk.sig(i) && !blk.visited(i)) {
+            mq.encode(cx, blk.mrCx(x, y), (mag(i) >>> plane) & 1)
+            blk.refined(i) = true
+          }
+          y += 1
+        }
+        x += 1
       }
+      y0 += 4
     }
+  }
 
   private def cup(mq: Mq.Encoder, cx: Mq.Contexts, blk: Block,
       mag: Array[Int], coeffs: Array[Int], plane: Int): Unit = {
-    var skipX = -1
-    var skipUntilY = -1
-    scan(blk.w, blk.h) { (x, y, y0) =>
-      val i = y * blk.w + x
-      if (x == skipX && y <= skipUntilY) ()
-      else if (y == y0 && blk.rlEligible(x, y0)) {
-        val first = (0 until 4)
-          .find(k => ((mag((y0 + k) * blk.w + x) >>> plane) & 1) == 1)
-        first match {
-          case None =>
+    var y0 = 0
+    while (y0 < blk.h) {
+      val yEnd = math.min(y0 + 4, blk.h)
+      var x = 0
+      while (x < blk.w) {
+        var y = y0
+        if (blk.rlEligible(x, y0)) {
+          // run-length mode: the first of the 4 rows whose bit is set
+          var k = 0
+          while (k < 4 && ((mag((y0 + k) * blk.w + x) >>> plane) & 1) == 0)
+            k += 1
+          if (k == 4) {
             mq.encode(cx, Ebcot.CxRl, 0)
-            skipX = x; skipUntilY = y0 + 3
-          case Some(k) =>
+          } else {
             mq.encode(cx, Ebcot.CxRl, 1)
             mq.encode(cx, Ebcot.CxUni, (k >> 1) & 1)
             mq.encode(cx, Ebcot.CxUni, k & 1)
-            val yy = y0 + k
-            encodeSign(mq, cx, blk, coeffs, x, yy)
-            skipX = x; skipUntilY = yy
+            encodeSign(mq, cx, blk, coeffs, x, y0 + k)
+          }
+          y = y0 + k + 1
         }
-      } else if (!blk.sig(i) && !blk.visited(i)) {
-        val bit = (mag(i) >>> plane) & 1
-        mq.encode(cx, blk.zcCx(x, y), bit)
-        if (bit == 1) {
-          encodeSign(mq, cx, blk, coeffs, x, y)
+        while (y < yEnd) {
+          val i = y * blk.w + x
+          if (!blk.sig(i) && !blk.visited(i)) {
+            val bit = (mag(i) >>> plane) & 1
+            mq.encode(cx, blk.zcCx(x, y), bit)
+            if (bit == 1) encodeSign(mq, cx, blk, coeffs, x, y)
+          }
+          y += 1
         }
+        x += 1
       }
+      y0 += 4
     }
   }
 
@@ -319,10 +333,8 @@ object Jp2Fixture {
       res.map { sb =>
         val blocks = Tier2.codeBlocks(sb, cbw, cbh)
         val encoded = blocks.map { cb =>
-          val blockCoeffs = Array.tabulate(cb.w * cb.h) { i =>
-            val (x, y) = (i % cb.w, i / cb.w)
-            coeffPlane((sb.y0 + cb.y0 + y) * w + (sb.x0 + cb.x0 + x))
-          }
+          val blockCoeffs = Array.tabulate(cb.w * cb.h)(i =>
+            coeffPlane((sb.y0 + cb.y0 + i / cb.w) * w + (sb.x0 + cb.x0 + i % cb.w)))
           val r = encodeBlock(blockCoeffs, cb.w, cb.h, sb.band)
           r.foreach { case (_, bps, _) =>
             maxBps(sb.qcdIdx) = math.max(maxBps(sb.qcdIdx), bps)

@@ -769,4 +769,51 @@ class Jp2Spec extends AnyFunSuite {
       assert((System.nanoTime() - t0) / 1e9 < 5.0, s"corrupt $i too slow")
     }
   }
+
+  test("the fixture encoder's output bytes are pinned: SHA-256 of a " +
+      "fixed set of encodings") {
+    // Digests of the encoder as it was before its tier-1 scan became
+    // plain while loops; any change to the emitted bytes (pass order,
+    // contexts, packet headers, markers) breaks this pin. The images
+    // mix a flat band (run-length mode, all-zero blocks) with a
+    // product field plus noise (dense blocks).
+    def img(w: Int, h: Int, bits: Int, seed: Long): Array[Int] = {
+      val rng = new Random(seed)
+      val max = (1 << bits) - 1
+      Array.tabulate(w * h) { i =>
+        val (x, y) = (i % w, i / w)
+        if (y < h / 4) 0
+        else math.min(max, (x * y) % (max + 1) / 2 + rng.nextInt(1 << (bits - 3)))
+      }
+    }
+    val F = graft.Jp2Fixture
+    val encodings = Seq(
+      "encode 64x64 8-bit" -> F.encode(img(64, 64, 8, 1), 64, 64, levels = 3),
+      "encode 256x256 12-bit, 2 tile-parts" -> F.encode(img(256, 256, 12, 2),
+        256, 256, levels = 4, bitDepth = 12, tileParts = 2),
+      "encode 37x29 10-bit, 8x4 blocks, SOP/EPH, 3 tile-parts" ->
+        F.encode(img(37, 29, 10, 3), 37, 29, levels = 2, bitDepth = 10,
+          cbw = 8, cbh = 4, tileParts = 3, sopEph = true),
+      "encodeMulti RCT, RPCL" -> F.encodeMulti(
+        Seq(img(48, 40, 8, 4), img(48, 40, 8, 5), img(48, 40, 8, 6)), 48, 40,
+        levels = 3, mct = true, progression = 2),
+      "encode97 varySteps" -> F.encode97(img(40, 40, 8, 7), 40, 40, levels = 2,
+        varySteps = true),
+      "encodeTiledGrid 64x48, 32x32 tiles" -> F.encodeTiledGrid(
+        img(64, 48, 8, 8), 64, 48, tileW = 32, tileH = 32, levels = 2))
+    val pinned = Seq(
+      "58fe1791cfbe7dde29756b790433dd2a4235a71886ed73cc728b7fed0098d239",
+      "d9e9f08e12c3c344f24935946dd48ae2082d9dc37377caedee15efa0d5655b0d",
+      "677455812ecb67b3ea48ab24709f1813ec205c9e7f0e27635f4417cae4c74932",
+      "08ef761117b9914c964a9ece03901b7f68541424ec58d9d03d6373e1b04bd896",
+      "e3a9c76a7a6b8bf4f943eba0caa6f3225d6a44f7c40340f723160fc5caeabe7c",
+      "89d60e7c83d003d589fe91e9bc716ffa1e888a7adf34b8fa061ed90aca03406a")
+    def sha(b: Array[Byte]): String =
+      java.security.MessageDigest.getInstance("SHA-256").digest(b)
+        .map(x => f"${x & 0xff}%02x").mkString
+    val got = encodings.map { case (_, b) => sha(b) }
+    encodings.zip(got).zip(pinned).foreach { case (((name, _), g), want) =>
+      assert(g == want, s"$name: digest $g, pinned $want")
+    }
+  }
 }

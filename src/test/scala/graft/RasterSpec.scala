@@ -165,6 +165,55 @@ class RasterSpec extends AnyFunSuite with SharedSpark {
     assert(sample(wLon, wLat) == 1.0 && sample(eLon, eLat) == 2.0)
   }
 
+  test("reprojectUtmToWgs84's separable kernel equals the generic " +
+      "warpNearest with wgs84ToUtm, bit for bit (zones, hemispheres, " +
+      "odd sizes)") {
+    import graft.functions.Geo.Crs
+    /** Compares one chip; returns how many output pixels it sampled. */
+    def check(c: Chip, zone: Int, north: Boolean): Int = {
+      val got = Raster.reprojectUtmToWgs84(c, zone, north)
+      val corners = Seq((c.minx, c.miny), (c.minx, c.maxy),
+        (c.maxx, c.miny), (c.maxx, c.maxy))
+        .map { case (e, n) => Crs.utmToWgs84(e, n, zone, north) }
+      val want = Raster.warpNearest(c, c.width, c.height,
+        corners.map(_._1).min, corners.map(_._2).min,
+        corners.map(_._1).max, corners.map(_._2).max,
+        (lon, lat) => Crs.wgs84ToUtm(lon, lat, zone, north))
+      val tag = s"zone=$zone north=$north ${c.width}x${c.height}"
+      def grid(x: Chip) = (x.width, x.height, x.minx, x.miny, x.maxx, x.maxy)
+      assert(grid(got) == grid(want), tag)
+      assert(java.util.Arrays.equals(got.px, want.px), tag)
+      got.px.count(_ >= 0)
+    }
+    val rng = new scala.util.Random(91)
+    var sampled = 0L
+    for {
+      zone <- Seq(1, 17, 31, 32, 60)
+      north <- Seq(true, false)
+      (w, h) <- Seq((1, 1), (7, 5), (33, 64), (116, 116), (61, 3))
+    } {
+      // somewhere inside the zone; every pixel value is distinct, so a
+      // pixel sampled from the wrong source cell shows
+      val e0 = 180000.0 + rng.nextDouble() * 500000.0
+      val n0 = (if (north) 0.0 else 1500000.0) + rng.nextDouble() * 7000000.0
+      val pw = 10.0 * (1 + rng.nextInt(6))
+      val ph = 10.0 * (1 + rng.nextInt(6))
+      sampled += check(Chip(w, h, e0, n0, e0 + w * pw, n0 + h * ph, -1.0,
+        Array.tabulate(w * h)(_.toDouble)), zone, north)
+    }
+    assert(sampled > 0, "no output pixel fell inside its source chip")
+    // and the grid transform itself, point by point: wgs84ToUtm's values
+    for (zone <- Seq(3, 31, 58); north <- Seq(true, false)) {
+      val cm = Crs.utmCentralMeridian(zone)
+      val lons = Array.fill(40)(cm - 3.0 + rng.nextDouble() * 6.0)
+      val lats = Array.fill(30)(-80.0 + rng.nextDouble() * 164.0)
+      val (e, n) = Crs.wgs84ToUtmGrid(lons, lats, zone, north)
+      for (r <- lats.indices; cc <- lons.indices)
+        assert((e(r * lons.length + cc), n(r * lons.length + cc)) ==
+          Crs.wgs84ToUtm(lons(cc), lats(r), zone, north), s"zone=$zone")
+    }
+  }
+
   // ---- R5 mosaic --------------------------------------------------
   test("mosaic first-wins: lower priority wins overlaps; nodata loses") {
     val a = Chip(2, 1, 0, 0, 2, 1, 0.0, Array(1.0, 1.0))  // covers x[0,2]

@@ -49,59 +49,25 @@ class TaskBudgetSpec extends AnyFunSuite with SharedSpark {
   private lazy val measured: Map[String, (Long, Long, Long)] = {
     // Round 22 (ADVICE r21 #1, medium): the budgets have near-zero
     // headroom and the SparkContext is shared by every suite, so the
-    // measured window must count ONLY this spec's own work. The runs
-    // execute under a dedicated job group; jobs are counted by group
-    // property, stages/tasks by membership in the group's jobs'
-    // stage sets (executed-only: a skipped stage never completes).
-    // Any still-active streaming query from a previously-run
+    // measured window must count ONLY this spec's own work: each run
+    // is counted under a job group of its own by
+    // `SharedSpark.dispatched` (executed stages only). Any
+    // still-active streaming query from a previously-run
     // Streaming*Spec would contaminate even that via its own group-
-    // less jobs — assert the context is stream-quiet first. The
-    // listener is removed afterwards so later suites don't pay for
-    // it.
+    // less jobs — assert the context is stream-quiet first.
     assert(spark.streams.active.isEmpty,
       "TaskBudgetSpec needs a stream-quiet SparkContext: active " +
         "streaming queries dispatch concurrent jobs that contaminate " +
         s"the dispatch counters (${spark.streams.active.map(_.name).mkString(", ")})")
-    val group = s"taskbudget-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicLong()
-    val stages = new java.util.concurrent.atomic.AtomicLong()
-    val tasks = new java.util.concurrent.atomic.AtomicLong()
-    val groupStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (j.properties != null &&
-          group == j.properties.getProperty("spark.jobGroup.id")) {
-          jobs.incrementAndGet()
-          j.stageInfos.foreach(si => groupStages.add(si.stageId))
-        }
-      override def onStageCompleted(
-          st: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        if (groupStages.contains(st.stageInfo.stageId)) {
-          stages.incrementAndGet()
-          tasks.addAndGet(st.stageInfo.numTasks.toLong)
-        }
+    // warm pass: memo builds + sizedCoalesce count jobs land here
+    budgets.foreach { case (n, _, _, _) =>
+      SparkEntry.queries(n)(spark, dir).count()
     }
-    spark.sparkContext.addSparkListener(listener)
-    def drain(): Unit =
-      org.apache.spark.graft.ListenerBusDrain.drain(spark.sparkContext)
-    try {
-      // warm pass: memo builds + sizedCoalesce count jobs land here
-      budgets.foreach { case (n, _, _, _) =>
-        SparkEntry.queries(n)(spark, dir).count()
-      }
-      budgets.map { case (n, _, _, _) =>
-        drain()
-        jobs.set(0); stages.set(0); tasks.set(0); groupStages.clear()
-        spark.sparkContext.setJobGroup(group, s"taskbudget $n")
-        try SparkEntry.queries(n)(spark, dir).count()
-        finally spark.sparkContext.clearJobGroup()
-        drain()
-        val m = (jobs.get(), stages.get(), tasks.get())
-        System.err.println(s"[taskbudget] $n jobs=${m._1} stages=${m._2} tasks=${m._3}")
-        n -> m
-      }.toMap
-    } finally spark.sparkContext.removeSparkListener(listener)
+    budgets.map { case (n, _, _, _) =>
+      val d = dispatched(SparkEntry.queries(n)(spark, dir).count())
+      System.err.println(s"[taskbudget] $n jobs=${d.jobs} stages=${d.stages} tasks=${d.tasks}")
+      n -> (d.jobs, d.stages, d.tasks)
+    }.toMap
   }
 
   budgets.foreach { case (name, maxJobs, maxStages, maxTasks) =>

@@ -148,9 +148,13 @@ class TxMultimodalSpec extends AnyFunSuite with SharedSpark {
     // real feature decode
     val f = Multimodal.decodeTiffFeatures(payload)
     assert(f.toSeq == Seq(4f, 4f, 0f, 15f, 7.5f))
-    // distributed resize 4x4 -> 8x8 through mapPartitions
-    val resized = Multimodal.resizeTiffs(
-      Seq(Multimodal.TiffRow(1L, payload)).toDS(), 8, 8).collect()
+    // distributed resize 4x4 -> 8x8 through mapPartitions, over a
+    // local input and over a repartitioned (non-local) copy of it
+    val rows = Seq(Multimodal.TiffRow(1L, payload)).toDS()
+    val resized = Multimodal.resizeTiffs(rows, 8, 8).collect()
+    val resizedDist = Multimodal.resizeTiffs(rows.repartition(2), 8, 8).collect()
+    assert(resizedDist.map(r => (r.media_id, r.payload.toSeq)).toSeq ==
+      resized.map(r => (r.media_id, r.payload.toSeq)).toSeq)
     val (back, epsg) = graft.sources.GeoTiff.decode(resized.head.payload)
     assert(epsg == 4326 && back.width == 8 && back.height == 8)
     // nearest upsample: each source pixel becomes a 2x2 block
