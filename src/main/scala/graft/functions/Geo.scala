@@ -261,13 +261,6 @@ object Geo {
     inside
   }
 
-  /** Point-in-polygon against outer rings only (holes ignored). Used
-    * where geometries are known hole-free; prefer
-    * [[containsPointFull]] for general polygons.
-    */
-  def containsPoint(rings: Seq[Ring], x: Double, y: Double): Boolean =
-    rings.exists(pointInRing(_, x, y))
-
   /** Hole-aware point-in-polygon: inside some outer ring AND outside
     * that polygon's interior rings. Used by the raster polygon mask
     * (R3).
@@ -437,18 +430,4 @@ object Geo {
     require(rings.size == 1, "transformWkt supports single polygons")
     toWkt(rings.head.map { case (x, y) => f(x, y) })
   }
-
-  /** GeoJSON geometry object → WKT (Polygon/MultiPolygon/Point), the
-    * reference's `shape(geo)` ingestion (`code/imagery_store.py:243`).
-    * Minimal recursive-descent over the coordinates array — no JSON
-    * library dependency beyond what the caller extracts.
-    */
-  def geoJsonToWkt(geoType: String, coordinates: Seq[Seq[Seq[Double]]]): String =
-    geoType.toUpperCase match {
-      case "POLYGON" =>
-        coordinates.head.map(p => s"${p(0)} ${p(1)}")
-          .mkString("POLYGON ((", ", ", "))")
-      case other =>
-        throw new IllegalArgumentException(s"unsupported GeoJSON type: $other")
-    }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.{Column, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
@@ -14,10 +14,12 @@ import org.apache.spark.sql.functions._
   * Kernel placement: R1 (per-pixel normalize) is the only kernel that
   * is hot at 100 TB (it touches every pixel of every chip) — it is
   * expressed with built-in `transform` lambdas so it stays inside
-  * whole-stage codegen. R2/R5 are per-chip-group aggregations (a few
-  * thousand groups per tile-date), expressed as a typed `Aggregator`
-  * with explicit sort keys so results are deterministic under Spark's
-  * unordered shuffle (SURVEY §7.3 hard part c).
+  * whole-stage codegen. R2, the band stack, is [[graft.operators.Tx]]'s
+  * `stackScene`, which sorts each scene's bands explicitly. R5 is a
+  * per-chip-group aggregation (a few thousand groups per tile-date),
+  * expressed as a typed `Aggregator` with explicit sort keys so
+  * results are deterministic under Spark's unordered shuffle (SURVEY
+  * §7.3 hard part c).
   */
 object Raster {
 
@@ -41,22 +43,6 @@ object Raster {
   /** Scalar form for tests / per-pixel use. */
   def normalizeS2Scalar(x: Double): Int =
     (math.min(math.max(x / 10000.0, 0.0), 1.0) * 255.0).toInt
-
-  // -----------------------------------------------------------------
-  // R2 — band stack: N single-band rows → one N-band row, band order
-  // = lexicographic band name (the reference's sorted-filename order,
-  // `code/imagery_store.py:67-68` + `code/tx.py:37-47`). groupBy +
-  // collect_list + array_sort: partial aggregation map-side, one
-  // shuffle on the (scene) key.
-  def bandStack(df: DataFrame, sceneKey: Seq[String], bandCol: String,
-      pxCol: String): DataFrame =
-    df.groupBy(sceneKey.map(col): _*)
-      .agg(array_sort(collect_list(struct(col(bandCol).as("band"),
-        col(pxCol).as("px")))).as("stack"))
-      .withColumn("bands", expr("transform(stack, s -> s.band)"))
-      .withColumn("px", expr("transform(stack, s -> s.px)"))
-      .withColumn("num_bands", size(col("bands")))
-      .drop("stack")
 
   // -----------------------------------------------------------------
   // R3 — clip by box: crop the chip to the pixel window intersecting

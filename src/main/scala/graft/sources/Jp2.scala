@@ -5,8 +5,8 @@ import java.nio.{ByteBuffer, ByteOrder}
 /** JPEG 2000 (JP2) decoder for S5 — the reference reads Sentinel-2
   * band rasters through rasterio/OpenJPEG
   * (`/root/reference/code/tx.py:26,38,42`); this is the
-  * zero-dependency equivalent for the reversible single-tile profile,
-  * every stage implemented from the public spec:
+  * zero-dependency equivalent, every stage implemented from the
+  * public spec:
   *
   *   - [[Jp2.parseHeader]] — JP2 container boxes (signature/ftyp/
   *     jp2h/ihdr/jp2c, ISO 15444-1 §I.4-I.5) and codestream markers
@@ -14,41 +14,34 @@ import java.nio.{ByteBuffer, ByteOrder}
   *     the Sentinel-2 profile fields (image/tile grid, bit depth,
   *     decomposition levels, 5/3 vs 9/7, code-block geometry,
   *     QCD guard bits + per-subband exponents, tile-part layout);
-  *   - [[Jp2.T800Entropy]] — the DEFAULT entropy stage: tier-2
-  *     packet-header parse with tag trees ([[Tier2]], Annex B), MQ
-  *     arithmetic decoding ([[Mq]], Annex C) and EBCOT tier-1
-  *     bit-plane coding ([[Ebcot]], Annex D);
-  *   - [[Wavelet53]] — the reversible 5/3 lifting DWT (Annex F),
-  *     forward + inverse, multi-level 2-D, property-tested to
-  *     round-trip bit-exactly on any shape.
+  *   - the entropy stage: tier-2 packet-header parse with tag trees
+  *     ([[Tier2]], Annex B), MQ arithmetic decoding ([[Mq]], Annex C)
+  *     and EBCOT tier-1 bit-plane coding ([[Ebcot]], Annex D);
+  *   - [[Wavelet53]] / [[Wavelet97]] — the reversible 5/3 and
+  *     irreversible 9/7 lifting DWTs (Annex F), forward + inverse,
+  *     multi-level 2-D.
   *
   * Validation without imaging libraries: Jp2Spec's test-only encoder
   * (Jp2Fixture) emits conformant codestreams and the decode is
   * proven BIT-EXACT against the source pixels across shapes, depths,
-  * levels, and content; MqSpec pins the arithmetic coder
-  * independently so encoder/decoder bugs cannot cancel silently.
+  * levels, and content (the 9/7 path within its quantization bound,
+  * with digests pinning its exact output); MqSpec pins the arithmetic
+  * coder independently so encoder/decoder bugs cannot cancel silently.
   *
-  * Multi-component streams (round 12): LRCP packets interleave
+  * One tile loop ([[Jp2.decodeComponent]]) serves [[Jp2.decode]],
+  * [[Jp2.decodeReduced]] and [[Jp2.decodeAll]]: each tile's packet
+  * stream is entropy-decoded against the tile's geometry,
+  * inverse-transformed locally at the requested scale, and placed at
+  * its canvas origin. Multi-component streams interleave LRCP packets
   * resolution-major, component-minor; [[Jp2.decodeAll]] decodes every
   * component and applies the inverse REVERSIBLE color transform
-  * (RCT, T.800 G.2.2) when the COD header signals MCT — so an RGB
-  * JP2 on the reversible path round-trips bit-exactly.
-  *
-  * Multi-tile streams (round 13): the image grid's tiles decode
-  * independently — each tile's packet stream is entropy-decoded
-  * against the tile's geometry, inverse-transformed locally, and
-  * placed at its canvas origin; `decodeReduced` applies the same
-  * loop per tile. The supported tiling is the ALIGNED profile —
-  * round 14 widened it from zero grid offsets to ARBITRARY
-  * 2^levels-aligned origins (XOsiz/YOsiz/XTOsiz/YTOsiz multiples of
-  * 2^levels, tile dims divisible by 2^levels — every real
-  * 256/512/1024 tiling including aligned crop origins), with
-  * SOP/EPH marker segments accepted; unaligned origins, subsampled
-  * components,
-  * non-reversible quantization styles, and the irreversible ICT are
-  * rejected loudly, never mis-decoded; the
-  * [[Jp2.UnimplementedEntropy]] plug remains for callers that want
-  * the refusing behavior of rounds ≤ 7.
+  * (RCT, T.800 G.2.2) when the COD header signals MCT. The supported
+  * tiling is the ALIGNED profile: XOsiz/YOsiz/XTOsiz/YTOsiz multiples
+  * of 2^levels and tile dims divisible by 2^levels (every real
+  * 256/512/1024 tiling, including aligned crop origins), with SOP/EPH
+  * marker segments accepted; unaligned origins, subsampled
+  * components, scalar-derived quantization and the irreversible ICT
+  * are rejected loudly, never mis-decoded.
   */
 object Jp2 {
 
@@ -96,109 +89,72 @@ object Jp2 {
   case class TilePart(tileIndex: Int, partIndex: Int,
       dataOffset: Int, dataLength: Int)
 
-  /** The extension point: turn the entropy-coded tile-part streams
-    * into the quantized wavelet-coefficient plane (Mallat layout,
-    * `width*height`, row-major) for one component.
-    */
-  trait EntropyDecoder {
-    def decode(header: Header, bytes: Array[Byte], component: Int): Array[Int]
-  }
-
-  /** Refusing plug (no longer the default — [[T800Entropy]] is): kept
-    * for callers that must fail fast instead of decoding, and as the
-    * loud error text for profile gaps. A silent zero-fill would
-    * mis-decode every pixel; the error names the stage and contract.
-    */
-  object UnimplementedEntropy extends EntropyDecoder {
-    def decode(header: Header, bytes: Array[Byte], component: Int): Array[Int] =
-      throw new UnsupportedOperationException(
-        "JP2 entropy decode (EBCOT tier-1/tier-2: packet headers + MQ " +
-          "arithmetic decoding of code blocks, ITU-T T.800 Annexes B-D) " +
-          "is not implemented in this zero-dependency build. Header " +
-          s"parse succeeded ($header). Plug a graft.sources.Jp2" +
-          ".EntropyDecoder producing the Mallat-layout coefficient " +
-          "plane; Jp2.decode then applies the reversible 5/3 inverse " +
-          "DWT (implemented, tested) to yield pixels.")
-  }
-
-  /** The real entropy stage (no longer a refusing stub): tier-2
-    * packet parse ([[Tier2.parsePackets]]) routes each code-block's
-    * MQ codeword segment into the tier-1 bit-plane decoder
+  /** Entropy stage for ONE tile of one component: the tier-2 packet
+    * parse ([[Tier2.parsePackets]]) routes each code-block's MQ
+    * codeword segment into the tier-1 bit-plane decoder
     * ([[Ebcot.decodeBlock]]), and the coefficients land at their
-    * subband offsets in the Mallat plane. Scope = the reversible
-    * single-tile profile (one tile-part, one layer, default precinct
-    * and code-block style); anything else still refuses loudly via
-    * the requires. Jp2Spec proves decode∘encode bit-exact against
-    * the test-only fixture encoder, whose tier-1 coder shares with
-    * this decoder only Ebcot's context rules, numbering and initial
-    * states and the MQ coder (its context formation is its own, see
-    * [[Ebcot]]).
+    * subband offsets in the tile's Mallat plane (`width*height`,
+    * row-major). Every packet header is walked (packet lengths chain
+    * sequentially — there is no skipping tier-2), but the tier-1
+    * decode — where the time goes — runs ONLY for contributions
+    * `keep` accepts, so an overview never pays for the detail
+    * subbands' coding passes. Jp2Spec proves decode∘encode bit-exact
+    * against the test-only fixture encoder, whose tier-1 coder shares
+    * with this decoder only Ebcot's context rules, numbering and
+    * initial states and the MQ coder (its context formation is its
+    * own, see [[Ebcot]]).
     */
-  object T800Entropy extends EntropyDecoder {
-    def decode(header: Header, bytes: Array[Byte], component: Int): Array[Int] =
-      decodeFiltered(header, bytes, component, _ => true)
-
-    /** Entropy stage with a contribution filter: every packet header
-      * is still walked (packet lengths chain sequentially — there is
-      * no skipping tier-2), but the EBCOT tier-1 decode — where the
-      * time goes — runs ONLY for contributions `keep` accepts.
-      * [[Jp2.decodeReduced]] uses this to decode an overview without
-      * paying for the detail subbands' coding passes.
-      */
-    def decodeFiltered(header: Header, bytes: Array[Byte], component: Int,
-        keep: Tier2.BlockContribution => Boolean): Array[Int] = {
-      // multi-component (round 12): LRCP one-layer one-precinct
-      // interleaves packets resolution-major, component-minor —
-      // Tier2.parsePackets walks every packet and collects the
-      // requested component's (components share the 1:1 tile grid;
-      // parseHeader refuses subsampling).
-      require(component >= 0 && component < header.components,
-        s"stream has ${header.components} components, asked for " +
-          s"component $component")
-      // ONE tile at a time: the header's geometry and tile-parts must
-      // describe a single tile (multi-tile streams are driven by
-      // Jp2.componentRaw/decodeReduced's tile loop, which passes a
-      // tile-adjusted header per tile)
-      require(header.tileParts.nonEmpty &&
-        header.tileParts.forall(_.tileIndex == 0),
-        s"one tile at a time; tile indices " +
-          header.tileParts.map(_.tileIndex).distinct.mkString(","))
-      require(header.sbExponents.nonEmpty,
-        "QCD carries no exponents (non-reversible quantization style?)")
-      // A tile's packet stream may span multiple tile-parts (real
-      // Sentinel-2 writes one per resolution); tile-part boundaries
-      // fall on packet boundaries (A.4.2), so concatenating the data
-      // segments in TPsot order restores one contiguous stream.
-      val data = {
-        val parts = header.tileParts.sortBy(_.partIndex)
-        val out = new Array[Byte](parts.map(_.dataLength).sum)
-        var at = 0
-        for (p <- parts) {
-          System.arraycopy(bytes, p.dataOffset, out, at, p.dataLength)
-          at += p.dataLength
-        }
-        out
+  private def decodeFiltered(header: Header, bytes: Array[Byte],
+      component: Int, keep: Tier2.BlockContribution => Boolean)
+      : Array[Int] = {
+    // LRCP one-layer one-precinct interleaves packets resolution-
+    // major, component-minor — Tier2.parsePackets walks every packet
+    // and collects the requested component's (components share the
+    // 1:1 tile grid; parseHeader refuses subsampling).
+    require(component >= 0 && component < header.components,
+      s"stream has ${header.components} components, asked for " +
+        s"component $component")
+    // ONE tile at a time: decodeComponent passes a tile-adjusted
+    // header per tile of a multi-tile stream
+    require(header.tileParts.nonEmpty &&
+      header.tileParts.forall(_.tileIndex == 0),
+      s"one tile at a time; tile indices " +
+        header.tileParts.map(_.tileIndex).distinct.mkString(","))
+    require(header.sbExponents.nonEmpty,
+      "QCD carries no exponents (non-reversible quantization style?)")
+    // A tile's packet stream may span multiple tile-parts (real
+    // Sentinel-2 writes one per resolution); tile-part boundaries
+    // fall on packet boundaries (A.4.2), so concatenating the data
+    // segments in TPsot order restores one contiguous stream.
+    val data = {
+      val parts = header.tileParts.sortBy(_.partIndex)
+      val out = new Array[Byte](parts.map(_.dataLength).sum)
+      var at = 0
+      for (p <- parts) {
+        System.arraycopy(bytes, p.dataOffset, out, at, p.dataLength)
+        at += p.dataLength
       }
-      val plane = new Array[Int](header.width * header.height)
-      for (c <- Tier2.parsePackets(data, 0, header, component)
-           if keep(c)) {
-        val mb = header.maxBitplanes(c.sb.qcdIdx)
-        val msbPlane = mb - c.zeroBitplanes - 1
-        val coeffs = Ebcot.decodeBlock(data, c.dataFrom, c.dataUntil,
-          c.cb.w, c.cb.h, c.sb.band, c.numPasses, msbPlane)
-        var y = 0
-        while (y < c.cb.h) {
-          var x = 0
-          while (x < c.cb.w) {
-            plane((c.sb.y0 + c.cb.y0 + y) * header.width +
-              (c.sb.x0 + c.cb.x0 + x)) = coeffs(y * c.cb.w + x)
-            x += 1
-          }
-          y += 1
-        }
-      }
-      plane
+      out
     }
+    val plane = new Array[Int](header.width * header.height)
+    for (c <- Tier2.parsePackets(data, 0, header, component)
+         if keep(c)) {
+      val mb = header.maxBitplanes(c.sb.qcdIdx)
+      val msbPlane = mb - c.zeroBitplanes - 1
+      val coeffs = Ebcot.decodeBlock(data, c.dataFrom, c.dataUntil,
+        c.cb.w, c.cb.h, c.sb.band, c.numPasses, msbPlane)
+      var y = 0
+      while (y < c.cb.h) {
+        var x = 0
+        while (x < c.cb.w) {
+          plane((c.sb.y0 + c.cb.y0 + y) * header.width +
+            (c.sb.x0 + c.cb.x0 + x)) = coeffs(y * c.cb.w + x)
+          x += 1
+        }
+        y += 1
+      }
+    }
+    plane
   }
 
   /** Per-subband log2 gain of the DWT (E.1: LL 0, HL/LH 1, HH 2). */
@@ -243,10 +199,6 @@ object Jp2 {
       Wavelet97.inverse2d(dq, w, hgt, lvls).map(v => math.rint(v).toInt)
     }
 
-  /** Tile grid in raster order: (tileIndex, x0, y0, w, h), clipped at
-    * the image edge. A single-tile stream yields the one full-image
-    * tile.
-    */
   /** The T.800 B.3 tile grid: tiles of XTsiz×YTsiz anchored at the
     * grid origin (XTOsiz, YTOsiz), CLIPPED to the image area
     * [XOsiz, Xsiz)×[YOsiz, Ysiz). Yields (tile index, x0, y0, tw, th)
@@ -304,44 +256,65 @@ object Jp2 {
         "this decoder's profile")
   }
 
-  /** One component: entropy stage → inverse transform, WITHOUT the
-    * DC level shift (the MCT pipeline un-shifts only after the
-    * inverse component transform). Multi-tile streams (round 13)
-    * decode tile by tile — each tile's packet stream is entropy-
-    * decoded against the TILE's geometry and inverse-transformed
-    * locally (exact under [[requireTileAlignment]]), then placed at
-    * its canvas origin.
+  /** A width or height at 1/2^d scale: the ceil-halving recursion. */
+  private def scaled(v: Int, d: Int): Int =
+    (0 until d).foldLeft(v)((a, _) => (a + 1) / 2)
+
+  /** One component at 1/2^discard scale, WITHOUT the DC level shift
+    * (the MCT pipeline un-shifts only after the inverse component
+    * transform) — the one tile loop behind [[decode]] (`discard = 0`),
+    * [[decodeReduced]] and [[decodeAll]]. Each tile's packet stream is
+    * entropy-decoded against the TILE's geometry, inverse-transformed
+    * locally (exact under [[requireTileAlignment]]), and placed at its
+    * canvas origin. Per tile, the Mallat layout puts every subband of
+    * the kept resolutions in the tile's top-left rectangle, at the
+    * SAME offsets the reduced tile's own layout assigns them (both
+    * sides of that identity are the ceil-halving recursion), so
+    * membership is a bounds test and extraction a rectangle copy;
+    * aligned origins keep the reduced tile origins integral, and the
+    * reduced edge widths tile the reduced image. Nothing is copied
+    * that the scale does not need: no rectangle at `discard = 0`, no
+    * placement for a single tile.
     */
-  private def componentRaw(h: Header, bytes: Array[Byte], component: Int,
-      entropy: EntropyDecoder): Array[Int] = {
+  private def decodeComponent(h: Header, bytes: Array[Byte],
+      component: Int, discard: Int): Array[Int] = {
     val grid = tileGrid(h)
     // any nonzero origin shifts the canvas coordinates every local
     // decode ignores — exact only under the aligned profile
-    if (h.xOff != 0 || h.yOff != 0 || h.xTOff != 0 || h.yTOff != 0)
-      requireTileAlignment(h)
-    if (grid.size == 1) {
-      val coeffs = entropy.decode(h, bytes, component)
-      require(coeffs.length == h.width * h.height,
-        s"entropy stage returned ${coeffs.length} coefficients for " +
-          s"${h.width}x${h.height}")
-      dequantInverse(h, h.width, h.height, h.levels, coeffs)
-    } else {
-      require(entropy eq T800Entropy,
-        "multi-tile decode requires the built-in entropy stage (a " +
-          "custom EntropyDecoder sees whole-image geometry only)")
-      requireTileAlignment(h)
-      val img = new Array[Int](h.width * h.height)
+    if (grid.size > 1 || h.xOff != 0 || h.yOff != 0 || h.xTOff != 0 ||
+      h.yTOff != 0) requireTileAlignment(h)
+    def tile(hTile: Header): Array[Int] = {
+      val (tw, th) = (hTile.width, hTile.height)
+      val (twr, thr) = (scaled(tw, discard), scaled(th, discard))
+      val coeffs = decodeFiltered(hTile, bytes, component,
+        c => c.sb.x0 + c.sb.w <= twr && c.sb.y0 + c.sb.h <= thr)
+      val rect =
+        if (discard == 0) coeffs
+        else {
+          val r = new Array[Int](twr * thr)
+          var y = 0
+          while (y < thr) {
+            System.arraycopy(coeffs, y * tw, r, y * twr, twr)
+            y += 1
+          }
+          r
+        }
+      dequantInverse(h, twr, thr, h.levels - discard, rect)
+    }
+    if (grid.size == 1) tile(h)
+    else {
+      val wr = scaled(h.width, discard)
+      val img = new Array[Int](wr * scaled(h.height, discard))
       for ((ti, x0, y0, tw, th) <- grid) {
         val parts = h.tileParts.filter(_.tileIndex == ti)
-        require(parts.nonEmpty,
-          s"no tile-part for tile $ti of ${grid.size}")
-        val hTile = h.copy(width = tw, height = th,
-          tileParts = parts.map(_.copy(tileIndex = 0)))
-        val coeffs = T800Entropy.decode(hTile, bytes, component)
-        val px = dequantInverse(h, tw, th, h.levels, coeffs)
+        require(parts.nonEmpty, s"no tile-part for tile $ti of ${grid.size}")
+        val px = tile(h.copy(width = tw, height = th,
+          tileParts = parts.map(_.copy(tileIndex = 0))))
+        val (twr, thr) = (scaled(tw, discard), scaled(th, discard))
+        val (rx0, ry0) = (x0 >> discard, y0 >> discard)
         var y = 0
-        while (y < th) {
-          System.arraycopy(px, y * tw, img, (y0 + y) * h.width + x0, tw)
+        while (y < thr) {
+          System.arraycopy(px, y * twr, img, (ry0 + y) * wr + rx0, twr)
           y += 1
         }
       }
@@ -376,21 +349,13 @@ object Jp2 {
       "irreversible 9/7 codestream without scalar-expounded " +
         "quantization (QCD style 2) — out of profile")
 
-  /** Decode one component to pixels: header parse → entropy stage
-    * (tier-2 + tier-1, [[T800Entropy]]) → inverse transform
-    * ([[componentRaw]]) → DC level shift (G.1.2). A stream coded with
-    * the multiple-component transform refuses here — its components
-    * are only meaningful jointly; use [[decodeAll]].
+  /** Decode one component to pixels: header parse → entropy stage →
+    * inverse transform ([[decodeComponent]]) → DC level shift
+    * (G.1.2). The full-scale case of [[decodeReduced]].
     */
-  def decode(bytes: Array[Byte], component: Int = 0,
-      entropy: EntropyDecoder = T800Entropy): (Header, Array[Int]) = {
-    val h = parseHeader(bytes)
-    requireProfile(h)
-    require(!h.mct,
-      "stream uses the multiple-component transform (COD SGcod MCT=1): " +
-        "a single decoded component is a color-transform plane, not " +
-        "pixels — use Jp2.decodeAll, which applies the inverse RCT")
-    (h, dcShift(h, component, componentRaw(h, bytes, component, entropy)))
+  def decode(bytes: Array[Byte], component: Int = 0): (Header, Array[Int]) = {
+    val (h, _, _, px) = decodeReduced(bytes, 0, component)
+    (h, px)
   }
 
   /** REDUCED-RESOLUTION decode — the raster engine's "overview read"
@@ -409,9 +374,10 @@ object Jp2 {
     * the source and keeping the top-left ceil-halved region d times
     * (Jp2Spec pins exactly that), quantization-bounded on 9/7.
     *
-    * Returns (header, reduced width, reduced height, pixels). MCT
-    * streams refuse like [[decode]] (a lone component is a color
-    * plane); `discard = 0` is the full decode.
+    * Returns (header, reduced width, reduced height, pixels);
+    * `discard = 0` is the full decode. A stream coded with the
+    * multiple-component transform refuses here — its components are
+    * only meaningful jointly; use [[decodeAll]].
     */
   def decodeReduced(bytes: Array[Byte], discard: Int, component: Int = 0)
       : (Header, Int, Int, Array[Int]) = {
@@ -420,79 +386,28 @@ object Jp2 {
     require(!h.mct,
       "stream uses the multiple-component transform (COD SGcod MCT=1): " +
         "a single decoded component is a color-transform plane, not " +
-        "pixels")
+        "pixels — use Jp2.decodeAll, which applies the inverse RCT")
     require(discard >= 0 && discard <= h.levels,
       s"discard $discard out of range for a ${h.levels}-level stream")
-    def halved(v0: Int): Int = {
-      var v = v0
-      (0 until discard).foreach(_ => v = (v + 1) / 2)
-      v
-    }
-    val (wr, hr) = (halved(h.width), halved(h.height))
-    val lvls = h.levels - discard
-    val grid = tileGrid(h)
-    if (grid.size > 1 || h.xOff != 0 || h.yOff != 0 ||
-      h.xTOff != 0 || h.yTOff != 0) requireTileAlignment(h)
-    val reduced = new Array[Int](wr * hr)
-    for ((ti, x0, y0, tw, th) <- grid) {
-      // per tile: the Mallat layout puts every subband of the kept
-      // resolutions in the tile's top-left twr×thr rectangle, at the
-      // SAME offsets the reduced tile's own layout assigns them
-      // (both sides of that identity are the ceil-halving recursion)
-      // — membership is a bounds test and extraction a rectangle
-      // copy. Tile alignment makes the reduced origins exact:
-      // x0/2^d stays integral, and interior reduced widths tile the
-      // reduced image (ceil distributes over the aligned grid).
-      val (twr, thr) = (halved(tw), halved(th))
-      val hTile =
-        if (grid.size == 1) h
-        else h.copy(width = tw, height = th,
-          tileParts = h.tileParts.filter(_.tileIndex == ti)
-            .map(_.copy(tileIndex = 0)))
-      require(grid.size == 1 || hTile.tileParts.nonEmpty,
-        s"no tile-part for tile $ti of ${grid.size}")
-      val keep = (c: Tier2.BlockContribution) =>
-        c.sb.x0 + c.sb.w <= twr && c.sb.y0 + c.sb.h <= thr
-      val full = T800Entropy.decodeFiltered(hTile, bytes, component, keep)
-      val rect = new Array[Int](twr * thr)
-      var y = 0
-      while (y < thr) {
-        System.arraycopy(full, y * tw, rect, y * twr, twr)
-        y += 1
-      }
-      val px = dequantInverse(h, twr, thr, lvls, rect)
-      val (rx0, ry0) = (halved0(x0, discard), halved0(y0, discard))
-      y = 0
-      while (y < thr) {
-        System.arraycopy(px, y * twr, reduced, (ry0 + y) * wr + rx0, twr)
-        y += 1
-      }
-    }
-    (h, wr, hr, dcShift(h, component, reduced))
+    (h, scaled(h.width, discard), scaled(h.height, discard),
+      dcShift(h, component, decodeComponent(h, bytes, component, discard)))
   }
 
-  /** Exact halving of an ALIGNED tile origin (x0 is a multiple of
-    * 2^d under [[requireTileAlignment]]; a single-tile grid's origin
-    * is 0).
-    */
-  private def halved0(x0: Int, d: Int): Int = x0 >> d
-
-  /** Decode EVERY component (round 12 — multi-component profile):
-    * per-component entropy + inverse DWT, then, when the COD header
-    * signals the multiple-component transform on the reversible path,
-    * the inverse REVERSIBLE COLOR TRANSFORM (RCT, G.2.2: G = Y −
+  /** Decode EVERY component: per-component entropy + inverse DWT
+    * ([[decodeComponent]]), then, when the COD header signals the
+    * multiple-component transform on the reversible path, the inverse
+    * REVERSIBLE COLOR TRANSFORM (RCT, G.2.2: G = Y −
     * floor((Cb + Cr) / 4); R = Cr + G; B = Cb + G) over the first
     * three components, then the per-component DC level shift. The
     * irreversible ICT (9/7 + floating YCbCr) stays out of profile and
     * refuses loudly. Returns the planes in component order (R, G, B
     * for an MCT stream).
     */
-  def decodeAll(bytes: Array[Byte],
-      entropy: EntropyDecoder = T800Entropy): (Header, Seq[Array[Int]]) = {
+  def decodeAll(bytes: Array[Byte]): (Header, Seq[Array[Int]]) = {
     val h = parseHeader(bytes)
     requireProfile(h)
     val raw = (0 until h.components)
-      .map(c => componentRaw(h, bytes, c, entropy))
+      .map(c => decodeComponent(h, bytes, c, 0))
     val planes =
       if (!h.mct) raw
       else {

@@ -34,21 +34,18 @@ object RasterIO {
   }
 
   /** S5 — distributed pixel decode over a [[readBandFiles]] scan:
-    * adds (width, height, pixels) per band file via [[Jp2.decode]]
-    * (tier-2 + MQ + EBCOT + inverse 5/3 DWT, component 0). A UDF is
+    * adds (width, height, pixels) per band file, component 0 at full
+    * scale ([[decodeBandPixelsReduced]] with `discard = 0`, the
+    * [[Jp2.decode]] case: tier-2 + MQ + EBCOT + inverse DWT). A UDF is
     * the right tool here — the work IS the per-row codec (no builtin
     * exists, and per-element expression overhead is noise against
     * entropy decoding); the scan stays an embarrassingly parallel
     * map, one file per task slot, no shuffle.
     */
   def decodeBandPixels(bands: DataFrame): DataFrame =
-    unpack(bands, decodeUdf(col("content")), "width", "height", "pixels")
+    decodeBandPixelsReduced(bands, 0)
 
   // Built once: making a UDF derives its encoders by reflection.
-  private val decodeUdf = udf { content: Array[Byte] =>
-    val (h, px) = Jp2.decode(content)
-    (h.width, h.height, px)
-  }
   private val decodeReducedUdf = udf { (content: Array[Byte], discard: Int) =>
     val (_, wr, hr, px) = Jp2.decodeReduced(content, discard)
     (wr, hr, px)

@@ -3,8 +3,7 @@ package graft.sources
 /** EBCOT tier-2: packet-header coding (ITU-T T.800 Annex B) and the
   * subband / code-block geometry that routes packet payloads into the
   * Mallat coefficient plane [[Wavelet53]] inverts. Together with
-  * [[Mq]] + [[Ebcot]] this completes [[Jp2.T800Entropy]] — the
-  * entropy stage Jp2.decode previously refused loudly.
+  * [[Mq]] + [[Ebcot]] this is [[Jp2]]'s entropy stage.
   *
   * Scope (asserted, not assumed): one TILE'S packet stream (the
   * multi-tile driver in [[Jp2]] feeds tiles one at a time), one

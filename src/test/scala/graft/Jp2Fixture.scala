@@ -4,7 +4,7 @@ import graft.sources.{Ebcot, Mq, Tier2, Wavelet53, Wavelet97}
 import java.io.{ByteArrayOutputStream, DataOutputStream}
 
 /** TEST-ONLY JPEG 2000 encoder — the golden-fixture generator that
-  * proves [[graft.sources.Jp2.T800Entropy]] end-to-end: it emits a
+  * proves [[graft.sources.Jp2]]'s entropy stage end-to-end: it emits a
   * spec-conformant reversible single-tile codestream (SIZ/COD/QCD +
   * one SOT/SOD tile-part, LRCP single-layer packets, tier-1 coded
   * code-blocks) that Jp2.decode must reproduce bit-exactly. The

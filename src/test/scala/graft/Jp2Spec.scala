@@ -9,9 +9,9 @@ import scala.util.Random
   * header parse against synthetic ITU-T T.800 streams built byte by
   * byte here, the reversible 5/3 DWT as a bit-exact round-trip
   * property, and the full [[Jp2.decode]] pipeline driven end-to-end
-  * through a plugged entropy stage. The entropy plug's failure mode
-  * (the documented scope cut) is itself under test: loud, named,
-  * never a silent zero-fill.
+  * through codestreams from the test-only encoder ([[Jp2Fixture]]);
+  * out-of-profile and corrupt streams fail loudly, never as a silent
+  * mis-decode.
   */
 class Jp2Spec extends AnyFunSuite {
 
@@ -145,39 +145,6 @@ class Jp2Spec extends AnyFunSuite {
   test("a non-JP2 byte stream is rejected, not misparsed") {
     val junk = Array.tabulate(64)(i => (i * 7).toByte)
     intercept[Exception] { Jp2.parseHeader(junk) }
-  }
-
-  // -- decode pipeline ---------------------------------------------
-
-  test("decode with a plugged entropy stage yields pixels: inverse DWT + DC shift") {
-    val rng = new Random(7)
-    val (w, h, depth, levels) = (16, 12, 12, 3)
-    val img = Array.fill(w * h)(rng.nextInt(1 << depth))
-    // what a real tier-1/tier-2 stage would hand over: the forward-
-    // transformed, DC-level-shifted coefficient plane (Mallat layout)
-    val coeffs = Wavelet53.forward2d(img.map(_ - (1 << (depth - 1))),
-      w, h, levels)
-    val fake = new Jp2.EntropyDecoder {
-      def decode(hdr: Jp2.Header, b: Array[Byte], c: Int): Array[Int] = {
-        assert(hdr.width == w && hdr.height == h) // header reaches the stage
-        coeffs.clone()
-      }
-    }
-    val bytes = jp2Container(
-      codestream(w, h, depth, levels, reversible = true, Array[Byte](0)))
-    val (hdr, px) = Jp2.decode(bytes, component = 0, entropy = fake)
-    assert(hdr.bitDepth == depth)
-    assert(px.toSeq == img.toSeq)
-  }
-
-  test("the UnimplementedEntropy plug still fails loudly, naming the stage") {
-    val bytes = codestream(32, 32, 8, 2, reversible = true, Array[Byte](0))
-    val err = intercept[UnsupportedOperationException] {
-      Jp2.decode(bytes, entropy = Jp2.UnimplementedEntropy)
-    }
-    assert(err.getMessage.contains("EBCOT"))
-    assert(err.getMessage.contains("MQ"))
-    assert(err.getMessage.contains("EntropyDecoder"))
   }
 
   // -- the real entropy stage: tier-2 + tier-1 + MQ ----------------
@@ -386,14 +353,6 @@ class Jp2Spec extends AnyFunSuite {
       assert(px.toSeq != img.toSeq,
         "a torn stream must not decode bit-exactly")
     }
-  }
-
-  test("entropy stage returning the wrong plane size is rejected") {
-    val short = new Jp2.EntropyDecoder {
-      def decode(h: Jp2.Header, b: Array[Byte], c: Int) = Array(1, 2, 3)
-    }
-    val bytes = codestream(32, 32, 8, 2, reversible = true, Array[Byte](0))
-    intercept[IllegalArgumentException] { Jp2.decode(bytes, entropy = short) }
   }
 
   test("multi-component decode: every plane round-trips bit-exactly " +
@@ -813,6 +772,78 @@ class Jp2Spec extends AnyFunSuite {
         .map(x => f"${x & 0xff}%02x").mkString
     val got = encodings.map { case (_, b) => sha(b) }
     encodings.zip(got).zip(pinned).foreach { case (((name, _), g), want) =>
+      assert(g == want, s"$name: digest $g, pinned $want")
+    }
+  }
+
+  test("decoded pixels are pinned: SHA-256 of the decode of a fixed " +
+      "set of encodings") {
+    // Digest of width, height, then every plane's samples as
+    // big-endian ints. The 9/7 path is only error-bounded elsewhere,
+    // so this is what pins its exact output.
+    // The fixture has no tiled 9/7 encoder: the multi-tile streams
+    // are 5/3.
+    def img(w: Int, h: Int, bits: Int, seed: Long): Array[Int] = {
+      val rng = new Random(seed)
+      val max = (1 << bits) - 1
+      Array.tabulate(w * h) { i =>
+        val (x, y) = (i % w, i / w)
+        if (y < h / 4) 0
+        else math.min(max, (x * y) % (max + 1) / 2 + rng.nextInt(1 << (bits - 3)))
+      }
+    }
+    val F = graft.Jp2Fixture
+    def full(b: Array[Byte]) = {
+      val (h, px) = Jp2.decode(b)
+      (h.width, h.height, Seq(px))
+    }
+    def reduced(b: Array[Byte], d: Int) = {
+      val (_, w, h, px) = Jp2.decodeReduced(b, d)
+      (w, h, Seq(px))
+    }
+    val lossy = F.encode97(img(61, 47, 12, 9), 61, 47, levels = 3,
+      bitDepth = 12)
+    val tiled = F.encodeTiledGrid(img(97, 61, 8, 10), 97, 61, tileW = 32,
+      tileH = 16, levels = 3)
+    val decodes = Seq(
+      "9/7 40x40 varySteps" -> full(F.encode97(img(40, 40, 8, 7), 40, 40,
+        levels = 2, varySteps = true)),
+      "9/7 61x47 12-bit" -> full(lossy),
+      "9/7 61x47 12-bit, decodeReduced d=1" -> reduced(lossy, 1),
+      "9/7 61x47 12-bit, decodeReduced d=2" -> reduced(lossy, 2),
+      "97x61, 32x16 tiles" -> full(tiled),
+      "97x61, 32x16 tiles, decodeReduced d=1" -> reduced(tiled, 1),
+      "70x45, 16x16 tiles, origins (8,4), grid (4,0)" -> full(
+        F.encodeTiledGrid(img(70, 45, 8, 11), 70, 45, tileW = 16,
+          tileH = 16, levels = 2, xOff = 8, yOff = 4, xTOff = 4)),
+      "decodeAll RCT, RPCL" -> {
+        val (h, planes) = Jp2.decodeAll(F.encodeMulti(
+          Seq(img(48, 40, 8, 4), img(48, 40, 8, 5), img(48, 40, 8, 6)),
+          48, 40, levels = 3, mct = true, progression = 2))
+        (h.width, h.height, planes)
+      },
+      "37x29 10-bit, SOP/EPH, 3 tile-parts" -> full(F.encode(
+        img(37, 29, 10, 3), 37, 29, levels = 2, bitDepth = 10, cbw = 8,
+        cbh = 4, tileParts = 3, sopEph = true)))
+    val pinned = Seq(
+      "b29d8970ee95b448981423addfaf5f2ac22f0cb8d5f390bc9a18966a0d6585fa",
+      "f879fa8f6c8b5573ba2c0bb9ca1999e510a833814aa759f506a0aa46a07743f0",
+      "0a533c2386bcf9f3e744c9c824e9f86fb8797b6e9a7e0a527e2271ccf0ad6a00",
+      "2d391b84dae8a15f69f6ec674b0434c37a34eeb0941e4a1ef4ea10143edc0813",
+      "ed898c0f382a340f2484c09e3ba3b810a3a0566583dd3de20488cf11f4ed9be6",
+      "a8025e6ee9e08ed326b2b97bca2c1e942390511d35a954ced1a9877f94d0ad90",
+      "69a9cb3c826ffb56c8b46f0028f5f3cb4fe577e8ad6fc58c3248ac0ed0bf4f4d",
+      "68361aaff94932a9dd19b3d751f67eff2aa9c79af634be294c5320758b3b53d8",
+      "41598784ea496fbca5aeef528ae42311c898918782ce2061edf67022f56505a4")
+    def sha(w: Int, h: Int, planes: Seq[Array[Int]]): String = {
+      val buf = java.nio.ByteBuffer.allocate(4 * (2 + planes.map(_.length).sum))
+      buf.putInt(w).putInt(h)
+      planes.foreach(p => p.foreach(buf.putInt))
+      java.security.MessageDigest.getInstance("SHA-256").digest(buf.array())
+        .map(x => f"${x & 0xff}%02x").mkString
+    }
+    val got = decodes.map { case (_, (w, h, planes)) => sha(w, h, planes) }
+    decodes.zip(got).zip(pinned).foreach { case (((name, _), g), want) =>
       assert(g == want, s"$name: digest $g, pinned $want")
     }
   }

@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.Raster
 import graft.functions.Raster.{Chip, PChip}
+import graft.operators.Tx
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -39,20 +40,23 @@ class RasterSpec extends AnyFunSuite with SharedSpark {
 
   // ---- R2 band stack ----------------------------------------------
   test("band stack orders bands lexicographically per scene") {
-    import spark.implicits._
-    val df = Seq(
-      ("t1", "B08", Seq(8.0)), ("t1", "B02", Seq(2.0)),
-      ("t1", "B04", Seq(4.0)), ("t1", "B03", Seq(3.0)),
-      ("t2", "B03", Seq(30.0)), ("t2", "B02", Seq(20.0))
-    ).toDF("scene", "band", "px")
-    val out = Raster.bandStack(df, Seq("scene"), "band", "px")
-      .orderBy("scene").collect()
-    assert(out(0).getAs[scala.collection.Seq[String]]("bands")
-      == Seq("B02", "B03", "B04", "B08"))
-    assert(out(0).getAs[scala.collection.Seq[scala.collection.Seq[Double]]]("px")
-      .map(_.toSeq) == Seq(Seq(2.0), Seq(3.0), Seq(4.0), Seq(8.0)))
-    assert(out(0).getAs[Int]("num_bands") == 4)
-    assert(out(1).getAs[scala.collection.Seq[String]]("bands") == Seq("B02", "B03"))
+    implicit val s = spark
+    import s.implicits._
+    def chip(v: Double) = Chip(1, 1, 0, 0, 1, 1, -1.0, Array(v))
+    val ds = Seq(
+      ("t1", "B08", 8.0), ("t1", "B02", 2.0),
+      ("t1", "B04", 4.0), ("t1", "B03", 3.0),
+      ("t2", "B03", 30.0), ("t2", "B02", 20.0)
+    ).map { case (sc, b, v) => Tx.BandChip(sc, b, chip(v)) }.toDS()
+      .repartition(2)
+    val out = Tx.bandStack(ds).collect().sortBy(_.scene)
+    assert(out.map(_.scene).toSeq == Seq("t1", "t2"))
+    assert(out(0).bands == Seq("B02", "B03", "B04", "B08"))
+    assert(out(0).chips.map(_.px.toSeq) ==
+      Seq(Seq(2.0), Seq(3.0), Seq(4.0), Seq(8.0)))
+    assert(out(0).chips.length == 4)
+    assert(out(1).bands == Seq("B02", "B03"))
+    assert(out(1).chips.map(_.px.toSeq) == Seq(Seq(20.0), Seq(30.0)))
   }
 
   // ---- R3 clip ----------------------------------------------------
