@@ -28,33 +28,8 @@ object GeoKernel {
     * order functions don't codegen and go megamorphic in long
     * sessions — see [[VecKernel]]).
     */
-  def gridCells(wkt: UTF8String, cell: Double): GenericArrayData = {
-    val (x1, y1, x2, y2) = Geo.envelope(wkt.toString)
-    val cx1 = math.floor(x1 / cell).toInt; val cx2 = math.floor(x2 / cell).toInt
-    val cy1 = math.floor(y1 / cell).toInt; val cy2 = math.floor(y2 / cell).toInt
-    // Long arithmetic: a large-extent envelope at a fine pitch must
-    // fail LOUDLY here, not wrap Int and surface as an executor OOM /
-    // NegativeArraySizeException three stages later. Callers that can
-    // see such rows route them through a theta-join instead
-    // ([[graft.plans.SpatialJoinRule]]'s maxCellsPerRow split).
-    val n = (cx2.toLong - cx1.toLong + 1L) * (cy2.toLong - cy1.toLong + 1L)
-    if (n > MaxCellsHard)
-      throw new IllegalArgumentException(
-        s"st_grid_cells: envelope [$x1,$y1,$x2,$y2] spans $n cells at " +
-          s"pitch $cell (hard cap $MaxCellsHard); raise the cell size, or " +
-          "keep spark.graft.spatial.autoGridJoin on so oversized rows " +
-          "take the guarded theta-join path")
-    val out = new Array[Any](n.toInt)
-    var i = 0; var cx = cx1
-    while (cx <= cx2) {
-      var cy = cy1
-      while (cy <= cy2) {
-        out(i) = UTF8String.fromString(s"$cx:$cy"); i += 1; cy += 1
-      }
-      cx += 1
-    }
-    new GenericArrayData(out)
-  }
+  def gridCells(wkt: UTF8String, cell: Double): GenericArrayData =
+    gridCellsEnv(envelope(wkt), cell)
 
   /** Hard per-row cap for [[gridCells]] materialization (4M cells ≈
     * hundreds of MB of cell strings — far past any sane join fanout).
@@ -63,16 +38,19 @@ object GeoKernel {
 
   /** Grid cells the envelope would span at `cell` pitch — the cheap
     * Long-valued pre-check [[graft.plans.SpatialJoinRule]] uses to
-    * route oversized rows away from [[gridCells]] explosion. Uses the
-    * SAME saturating `math.floor(·).toInt` per-axis conversion as
-    * [[gridCells]], so `count ≤ k` ⇒ `gridCells` emits exactly
-    * `count` cells.
+    * route oversized rows away from [[gridCells]] explosion;
+    * `count ≤ k` ⇒ `gridCells` emits exactly `count` cells.
     */
-  def cellCount(wkt: UTF8String, cell: Double): Long = {
-    val (x1, y1, x2, y2) = Geo.envelope(wkt.toString)
-    (math.floor(x2 / cell).toInt.toLong - math.floor(x1 / cell).toInt + 1L) *
-      (math.floor(y2 / cell).toInt.toLong - math.floor(y1 / cell).toInt + 1L)
-  }
+  def cellCount(wkt: UTF8String, cell: Double): Long =
+    cellCountEnv(envelope(wkt), cell)
+
+  /** Cell index of one coordinate: `math.floor(·/cell).toInt`, which
+    * SATURATES at the Int range (a plan-side Cast(Long→Int) would
+    * throw under ANSI mode and wrap without it). Every cell id, count
+    * and reference cell goes through it, so they agree at extreme
+    * coordinates too.
+    */
+  private def cellIndex(v: Double, cell: Double): Int = math.floor(v / cell).toInt
 
   /** [[cellCount]] from an ALREADY-COMPUTED envelope array
     * ([minx,miny,maxx,maxy]) — pure arithmetic, no WKT parse. Both
@@ -80,60 +58,60 @@ object GeoKernel {
     * `st_envelope` once can derive the routing count and the cell
     * explode from it instead of re-parsing the WKT per expression
     * (guide §4: cut per-row work on the hot candidate-generation
-    * path). Same saturating per-axis math as [[cellCount]] by
-    * construction.
+    * path).
     */
   def cellCountEnv(env: org.apache.spark.sql.catalyst.util.ArrayData,
       cell: Double): Long =
-    (math.floor(env.getDouble(2) / cell).toInt.toLong -
-      math.floor(env.getDouble(0) / cell).toInt + 1L) *
-      (math.floor(env.getDouble(3) / cell).toInt.toLong -
-        math.floor(env.getDouble(1) / cell).toInt + 1L)
+    (cellIndex(env.getDouble(2), cell).toLong -
+      cellIndex(env.getDouble(0), cell) + 1L) *
+      (cellIndex(env.getDouble(3), cell).toLong -
+        cellIndex(env.getDouble(1), cell) + 1L)
 
   /** [[gridCells]] from an ALREADY-COMPUTED envelope array — the
-    * parse-free twin (see [[cellCountEnv]]); identical ids, identical
-    * hard cap.
+    * parse-free form (see [[cellCountEnv]]) and the one cell loop.
     */
   def gridCellsEnv(env: org.apache.spark.sql.catalyst.util.ArrayData,
       cell: Double): GenericArrayData = {
-    val x1 = env.getDouble(0); val y1 = env.getDouble(1)
-    val x2 = env.getDouble(2); val y2 = env.getDouble(3)
-    val cx1 = math.floor(x1 / cell).toInt; val cx2 = math.floor(x2 / cell).toInt
-    val cy1 = math.floor(y1 / cell).toInt; val cy2 = math.floor(y2 / cell).toInt
-    val n = (cx2.toLong - cx1.toLong + 1L) * (cy2.toLong - cy1.toLong + 1L)
+    val n = cellCountEnv(env, cell)
+    // Long arithmetic: a large-extent envelope at a fine pitch must
+    // fail LOUDLY here, not wrap Int and surface as an executor OOM /
+    // NegativeArraySizeException three stages later. Callers that can
+    // see such rows route them through a theta-join instead
+    // ([[graft.plans.SpatialJoinRule]]'s MaxCellsPerRow split).
     if (n > MaxCellsHard)
       throw new IllegalArgumentException(
-        s"st_grid_cells_env: envelope [$x1,$y1,$x2,$y2] spans $n cells at " +
+        s"st_grid_cells: envelope [${env.getDouble(0)},${env.getDouble(1)}," +
+          s"${env.getDouble(2)},${env.getDouble(3)}] spans $n cells at " +
           s"pitch $cell (hard cap $MaxCellsHard); raise the cell size, or " +
           "keep spark.graft.spatial.autoGridJoin on so oversized rows " +
           "take the guarded theta-join path")
+    val cx1 = cellIndex(env.getDouble(0), cell)
+    val cy1 = cellIndex(env.getDouble(1), cell)
+    val ny = (cellIndex(env.getDouble(3), cell).toLong - cy1 + 1L).toInt
+    // iterate by count: a saturated upper index is Int.MaxValue, where
+    // a `cx <= cx2; cx += 1` loop would wrap and never end
     val out = new Array[Any](n.toInt)
-    var i = 0; var cx = cx1
-    while (cx <= cx2) {
-      var cy = cy1
-      while (cy <= cy2) {
-        out(i) = UTF8String.fromString(s"$cx:$cy"); i += 1; cy += 1
-      }
-      cx += 1
+    var i = 0
+    while (i < out.length) {
+      out(i) = UTF8String.fromString(s"${cx1 + i / ny}:${cy1 + i % ny}")
+      i += 1
     }
     new GenericArrayData(out)
   }
 
   /** Top-left shared cell of two envelopes ([minx,miny,maxx,maxy]) —
-    * the reference cell of the grid-join dedup. Kept HERE, next to
-    * [[gridCells]], so the two cell-id formatters are provably the
-    * same math: `math.floor(·/cell).toInt` (Double→Int SATURATES on
-    * overflow — a plan-side Cast(Long→Int) would throw under ANSI
-    * mode and wrap without it, silently dropping pairs at extreme
-    * coordinates).
+    * the reference cell of the grid-join dedup, through the same
+    * [[cellIndex]] as [[gridCellsEnv]]'s ids (a plan-built Cast chain
+    * would throw or wrap at extreme coordinates, silently dropping
+    * pairs).
     */
   def refCell(lEnv: org.apache.spark.sql.catalyst.util.ArrayData,
       rEnv: org.apache.spark.sql.catalyst.util.ArrayData,
       cell: Double): UTF8String = {
-    val cx = math.max(math.floor(lEnv.getDouble(0) / cell).toInt,
-      math.floor(rEnv.getDouble(0) / cell).toInt)
-    val cy = math.max(math.floor(lEnv.getDouble(1) / cell).toInt,
-      math.floor(rEnv.getDouble(1) / cell).toInt)
+    val cx = math.max(cellIndex(lEnv.getDouble(0), cell),
+      cellIndex(rEnv.getDouble(0), cell))
+    val cy = math.max(cellIndex(lEnv.getDouble(1), cell),
+      cellIndex(rEnv.getDouble(1), cell))
     UTF8String.fromString(s"$cx:$cy")
   }
 }
@@ -256,8 +234,8 @@ case class StGridCells(left: Expression, right: Expression)
 /** `st_cell_count(wkt, cell_size)` — how many grid cells the
   * geometry's envelope spans, WITHOUT materializing them. The
   * oversized-row routing predicate of [[graft.plans.SpatialJoinRule]]
-  * (rows over `spark.graft.spatial.maxCellsPerRow` skip the cell
-  * explode and take the exact theta-join).
+  * (rows over its `MaxCellsPerRow` skip the cell explode and take the
+  * exact theta-join).
   */
 case class StCellCount(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -343,8 +321,8 @@ case class StIntersectsNoRewrite(left: Expression, right: Expression)
 
 /** `st_ref_cell(l_env, r_env, cell_size)` — the top-left cell shared
   * by two envelopes, formatted with [[GeoKernel.refCell]] (identical
-  * saturating math to [[GeoKernel.gridCells]]; see its doc for why a
-  * plan-built Cast chain is NOT equivalent).
+  * saturating math to [[GeoKernel.gridCellsEnv]]; see its doc for why
+  * a plan-built Cast chain is NOT equivalent).
   */
 case class StRefCell(first: Expression, second: Expression,
     third: Expression) extends TernaryExpression {
@@ -400,6 +378,10 @@ object GeoFunctions {
       info("st_cell_count_env",
         "st_cell_count_env(env, cell_size) - grid-cell count from a st_envelope array"),
       (e: Seq[Expression]) => StCellCountEnv(e(0), e(1))),
+    ("st_ref_cell",
+      info("st_ref_cell",
+        "st_ref_cell(l_env, r_env, cell_size) - top-left grid cell shared by two st_envelope arrays"),
+      (e: Seq[Expression]) => StRefCell(e(0), e(1), e(2))),
     ("st_intersects_norewrite",
       info("st_intersects_norewrite",
         "st_intersects_norewrite(a, b) - st_intersects exempt from the auto grid-join rewrite"),

@@ -3,249 +3,20 @@ package graft.functions
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 
-/** Approximate frequency sketching for the training-data pipeline
-  * tier: a Count-Min sketch as a typed `Aggregator`, giving
-  * "frequency of any token over 100 TB of text in one shuffle-free
-  * pass + one tiny merge" — the companion to the exact hash-groupBy
-  * dedup path (graft.queries.Dedup q27), for when the key cardinality
-  * itself is the problem.
-  *
-  * Distribution-correct by construction: the buffer merge is
-  * element-wise addition (commutative + associative), so partial
-  * sketches built per partition combine in any order to the same
-  * sketch. Hashing is deterministic (seeded multiply-shift over the
-  * token's UTF-8 bytes), so retries/speculative tasks agree.
+/** Misra-Gries heavy hitters as a typed `Aggregator` — the one
+  * sketch Spark does not ship in the form the engine needs. Spark's
+  * own sketches cover the rest (`count_min_sketch`,
+  * `hll_sketch_agg`/`hll_sketch_estimate`, `percentile_approx`,
+  * `kll_sketch_*`, `bloom_filter_agg`); its `approx_top_k` gives no
+  * deterministic error bound, and q145's exact two-pass heavy
+  * hitters need MG's.
   */
 object Sketches {
 
-  /** depth×width count matrix, row-major. */
-  case class CMS(depth: Int, width: Int, counts: Array[Long]) {
-    /** Point estimate: min over rows (classic CM upper-bound estimate;
-      * always ≥ the true count, equality when no collisions).
-      */
-    def estimate(token: String): Long = {
-      var best = Long.MaxValue
-      var d = 0
-      while (d < depth) {
-        val c = counts(d * width + Sketches.bucket(token, d, width))
-        if (c < best) best = c
-        d += 1
-      }
-      best
-    }
-    def add(token: String, n: Long = 1L): CMS = {
-      var d = 0
-      while (d < depth) {
-        counts(d * width + Sketches.bucket(token, d, width)) += n
-        d += 1
-      }
-      this
-    }
-    def mergeWith(o: CMS): CMS = {
-      require(depth == o.depth && width == o.width, "sketch shape mismatch")
-      var i = 0
-      while (i < counts.length) { counts(i) += o.counts(i); i += 1 }
-      this
-    }
-  }
-
-  def empty(depth: Int, width: Int): CMS =
-    CMS(depth, width, new Array[Long](depth * width))
-
-  /** Deterministic per-row hash bucket (FNV-1a over bytes, row-salted,
-    * multiply-mixed). Independent-ish rows via distinct salts.
-    */
-  private[functions] def bucket(token: String, row: Int, width: Int): Int = {
-    var h = 0xcbf29ce484222325L ^ (0x9e3779b97f4a7c15L * (row + 1))
-    val bytes = token.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    var i = 0
-    while (i < bytes.length) {
-      h ^= bytes(i) & 0xffL
-      h *= 0x100000001b3L
-      i += 1
-    }
-    h ^= h >>> 33
-    (((h % width) + width) % width).toInt
-  }
-
-  /** Typed Aggregator: Dataset[String] → CMS. Use as
-    * `ds.select(new CountMinAggregator(4, 1024).toColumn)` or per-key
-    * via `groupByKey(...).agg(...)`.
-    */
-  class CountMinAggregator(depth: Int, width: Int)
-      extends Aggregator[String, CMS, CMS] {
-    override def zero: CMS = empty(depth, width)
-    override def reduce(b: CMS, a: String): CMS = b.add(a)
-    override def merge(b1: CMS, b2: CMS): CMS = b1.mergeWith(b2)
-    override def finish(r: CMS): CMS = r
-    override def bufferEncoder: Encoder[CMS] = Encoders.product[CMS]
-    override def outputEncoder: Encoder[CMS] = Encoders.product[CMS]
-  }
-
-  // -----------------------------------------------------------------
-  // HyperLogLog — distinct-count sketch (the published Flajolet et al.
-  // register scheme): register j keeps the max leading-zero rank of
-  // hashes landing in bucket j. The merge is element-wise MAX —
-  // commutative, associative, idempotent — so partial sketches from
-  // any partitioning (and retried tasks) combine to the SAME sketch:
-  // fully deterministic, unlike sampling-based cardinality estimates.
-  // Companion to exact COUNT(DISTINCT): at 100 TB the exact form
-  // shuffles every key once; the sketch is one shuffle-free pass and
-  // a (1 << p)-byte merge.
-
-  case class HLL(p: Int, registers: Array[Byte]) {
-    /** Standard HLL estimate with the small-range linear-counting
-      * correction (the published bias corrections for this register
-      * count).
-      */
-    def estimate: Double = {
-      val m = registers.length
-      var invSum = 0.0
-      var zeros = 0
-      var i = 0
-      while (i < m) {
-        invSum += 1.0 / (1L << (registers(i) & 0xff)).toDouble
-        if (registers(i) == 0) zeros += 1
-        i += 1
-      }
-      val alpha = m match {
-        case 16 => 0.673
-        case 32 => 0.697
-        case 64 => 0.709
-        case _ => 0.7213 / (1.0 + 1.079 / m)
-      }
-      val raw = alpha * m * m / invSum
-      if (raw <= 2.5 * m && zeros > 0) m * math.log(m.toDouble / zeros)
-      else raw
-    }
-    def add(token: String): HLL = {
-      val h = Sketches.hash64(token)
-      val idx = (h >>> (64 - p)).toInt
-      val rest = h << p
-      val rank = (java.lang.Long.numberOfLeadingZeros(rest | (1L << (p - 1))) + 1)
-        .toByte
-      if ((registers(idx) & 0xff) < rank) registers(idx) = rank
-      this
-    }
-    def mergeWith(o: HLL): HLL = {
-      require(p == o.p, "sketch precision mismatch")
-      var i = 0
-      while (i < registers.length) {
-        if ((o.registers(i) & 0xff) > (registers(i) & 0xff))
-          registers(i) = o.registers(i)
-        i += 1
-      }
-      this
-    }
-  }
-
-  def emptyHll(p: Int = 12): HLL = HLL(p, new Array[Byte](1 << p))
-
-  /** Deterministic 64-bit hash (FNV-1a + finalizer) over UTF-8. */
-  private[functions] def hash64(token: String): Long = {
-    var h = 0xcbf29ce484222325L
-    val bytes = token.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    var i = 0
-    while (i < bytes.length) {
-      h ^= bytes(i) & 0xffL
-      h *= 0x100000001b3L
-      i += 1
-    }
-    h ^= h >>> 33; h *= 0xff51afd7ed558ccdL; h ^= h >>> 33
-    h
-  }
-
-  /** Typed Aggregator: Dataset[String] → HLL. */
-  class HllAggregator(p: Int = 12) extends Aggregator[String, HLL, HLL] {
-    override def zero: HLL = emptyHll(p)
-    override def reduce(b: HLL, a: String): HLL = b.add(a)
-    override def merge(b1: HLL, b2: HLL): HLL = b1.mergeWith(b2)
-    override def finish(r: HLL): HLL = r
-    override def bufferEncoder: Encoder[HLL] = Encoders.product[HLL]
-    override def outputEncoder: Encoder[HLL] = Encoders.product[HLL]
-  }
-
-  // -----------------------------------------------------------------
-  // Quantile sketch — the buffer-collapse compactor family (MRL /
-  // KLL lineage): level i holds up to k values each representing
-  // 2^i originals; a full level sorts and keeps every other element
-  // one level up. Rank error is O(n log(n/k) / k) — at k=256 the
-  // p50/p95/p99 of a 100 TB length distribution come out of one
-  // shuffle-free pass + a few-KB merge, where the exact form
-  // (q51-style percentile) must sort or multi-pass the column.
-  // Compaction keeps elements at EVEN positions (deterministic, not
-  // coin-flipped): identical inputs — including speculative task
-  // retries — always build the identical sketch.
-
-  case class QSketch(k: Int, n: Long, levels: Seq[Seq[Double]]) {
-    def add(x: Double): QSketch = {
-      val ls = levels.toBuffer
-      ls(0) = ls(0) :+ x
-      QSketch(k, n + 1, compactFrom(ls, 0))
-    }
-    def mergeWith(o: QSketch): QSketch = {
-      require(k == o.k, "sketch k mismatch")
-      val depth = math.max(levels.length, o.levels.length)
-      val ls = (0 until depth).map { i =>
-        levels.applyOrElse(i, (_: Int) => Vector.empty[Double]) ++
-          o.levels.applyOrElse(i, (_: Int) => Vector.empty[Double])
-      }.toBuffer
-      QSketch(k, n + o.n, compactFrom(ls, 0))
-    }
-    private def compactFrom(ls: scala.collection.mutable.Buffer[Seq[Double]],
-        from: Int): Seq[Seq[Double]] = {
-      var i = from
-      while (i < ls.length) {
-        if (ls(i).length > k) {
-          val sorted = ls(i).sorted
-          val kept = sorted.indices.collect {
-            case j if j % 2 == 0 => sorted(j)
-          }
-          ls(i) = Vector.empty
-          if (i + 1 >= ls.length) ls.append(Vector.empty)
-          ls(i + 1) = ls(i + 1) ++ kept
-        }
-        i += 1
-      }
-      ls.toSeq
-    }
-    /** Estimated value at quantile q in [0, 1] — weighted rank walk
-      * over the level buffers (weight 2^level per element).
-      */
-    def quantile(q: Double): Double = {
-      val weighted = levels.zipWithIndex.flatMap { case (buf, lvl) =>
-        buf.map(v => (v, 1L << lvl))
-      }.sortBy(_._1)
-      require(weighted.nonEmpty, "empty sketch")
-      val total = weighted.map(_._2).sum
-      val target = math.min((q * total).toLong, total - 1)
-      var acc = 0L
-      weighted.foreach { case (v, w) =>
-        acc += w
-        if (acc > target) return v
-      }
-      weighted.last._1
-    }
-  }
-
-  def emptyQuantile(k: Int = 256): QSketch = QSketch(k, 0L, Seq(Vector.empty))
-
-  /** Typed Aggregator: Dataset[Double] → QSketch. */
-  class QuantileAggregator(k: Int = 256)
-      extends Aggregator[Double, QSketch, QSketch] {
-    override def zero: QSketch = emptyQuantile(k)
-    override def reduce(b: QSketch, a: Double): QSketch = b.add(a)
-    override def merge(b1: QSketch, b2: QSketch): QSketch = b1.mergeWith(b2)
-    override def finish(r: QSketch): QSketch = r
-    override def bufferEncoder: Encoder[QSketch] = Encoders.product[QSketch]
-    override def outputEncoder: Encoder[QSketch] = Encoders.product[QSketch]
-  }
-
-  // -----------------------------------------------------------------
-  // Misra-Gries — deterministic heavy hitters in k counters. The
-  // DETERMINISTIC-GUARANTEE companion to the CMS above: CMS gives a
-  // probabilistic overestimate for ANY queried key; MG keeps at most
-  // k counters and guarantees, with no randomness at all,
+  // Misra-Gries — deterministic heavy hitters in k counters. Where a
+  // Count-Min sketch gives a probabilistic overestimate for ANY
+  // queried key, MG keeps at most k counters and guarantees, with no
+  // randomness at all,
   //     true - n/(k+1)  ≤  estimate  ≤  true
   // so every item with frequency > n/(k+1) is CERTAIN to be in the
   // summary — the candidate-superset property a two-pass exact

@@ -70,15 +70,12 @@ object SpatialJoin {
       .withColumn("__env", expr(s"st_envelope($rightGeom)"))
       .withColumn("__cell", explode(expr(cellsExpr("__env", cellSize))))
     // reference cell = top-left cell of the envelope intersection,
-    // computed arithmetically from the carried envelopes: emit the
-    // pair only there (exactly-once dedup without a shuffle). Equals
-    // max of the per-side minimum cell indices on each axis — a
-    // common cell whenever the pair shares any cell.
+    // computed from the carried envelopes by the same saturating
+    // kernel math as the cell ids: emit the pair only there
+    // (exactly-once dedup without a shuffle). A common cell whenever
+    // the pair shares any cell.
     val refCell =
-      s"""concat(CAST(greatest(floor(element_at(a.__env, 1) / $cellSize),
-         |                     floor(element_at(b.__env, 1) / $cellSize)) AS INT), ':',
-         |       CAST(greatest(floor(element_at(a.__env, 2) / $cellSize),
-         |                     floor(element_at(b.__env, 2) / $cellSize)) AS INT))""".stripMargin
+      s"st_ref_cell(a.__env, b.__env, CAST($cellSize AS DOUBLE))"
     l.as("a").join(r.as("b"), col("a.__cell") === col("b.__cell"))
       .filter(expr(s"a.__cell = $refCell"))
       .filter(expr(s"st_intersects(a.$leftGeom, b.$rightGeom)"))

@@ -38,9 +38,8 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
   *   - cell pitch from `spark.graft.spatial.cellSize` (default 1.0,
   *     ≈ the median geometry extent in geometry units; the session
   *     that owns the query sets it per corpus);
-  *   - rows whose envelope spans more than
-  *     `spark.graft.spatial.maxCellsPerRow` cells (default 4096) are
-  *     NOT exploded — a continent-sized geometry at a fine pitch
+  *   - rows whose envelope spans more than [[MaxCellsPerRow]] cells
+  *     are NOT exploded — a continent-sized geometry at a fine pitch
   *     would fan out to millions of rows (and past Int range,
   *     overflow). The rewrite instead splits each side on a cheap
   *     `st_cell_count` predicate and unions three disjoint branches:
@@ -69,8 +68,10 @@ object SpatialJoinRule extends Rule[LogicalPlan] with PredicateHelper {
   private def cellSize: Double =
     conf.getConfString("spark.graft.spatial.cellSize", "1.0").toDouble
 
-  private def maxCellsPerRow: Long =
-    conf.getConfString("spark.graft.spatial.maxCellsPerRow", "4096").toLong
+  /** Envelope cells above which a row skips the grid explode and takes
+    * the theta-join fallback.
+    */
+  val MaxCellsPerRow: Long = 4096L
 
   private def boundTo(e: Expression, p: LogicalPlan): Boolean =
     e.references.nonEmpty && e.references.subsetOf(p.outputSet)
@@ -98,7 +99,7 @@ object SpatialJoinRule extends Rule[LogicalPlan] with PredicateHelper {
   private def rewrite(j: Join, si: StIntersects,
       rest: Seq[Expression]): LogicalPlan = {
     val cs = Literal(cellSize, DoubleType)
-    val maxC = Literal(maxCellsPerRow, LongType)
+    val maxC = Literal(MaxCellsPerRow, LongType)
     val (lGeom, rGeom) =
       if (boundTo(si.left, j.left)) (si.left, si.right) else (si.right, si.left)
 
@@ -162,7 +163,7 @@ object SpatialJoinRule extends Rule[LogicalPlan] with PredicateHelper {
       ++ rest).reduce(And)
     // Each fallback join HINTS its big-filtered side as the broadcast
     // build side (round 22, guide §3.1): oversized rows are rare by
-    // the rule's own premise (they are the tail the maxCellsPerRow
+    // the rule's own premise (they are the tail the MaxCellsPerRow
     // split exists for), so the filtered side is the small one — and
     // when it is EMPTY (the common case), AQE materializes the empty
     // broadcast first and propagates the empty relation through the

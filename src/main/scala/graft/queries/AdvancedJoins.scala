@@ -158,8 +158,8 @@ object AdvancedJoins extends QueryModule {
   // ---------------------------------------------------------------
   // q65 — Bloom-pruned semi join (operators/BloomPrune): keep fact
   // rows whose supplier belongs to one nation's supplier set, with
-  // the fact side pruned MAP-SIDE by a Bloom filter built from the
-  // dimension subset in one aggregation — the runtime-filter shape
+  // the fact side pruned MAP-SIDE by Spark's Bloom filter built from
+  // the dimension subset in one aggregation — the runtime-filter shape
   // that shrinks the semi-join shuffle to ~selectivity of the fact
   // table. The exact semi join after the prune removes false
   // positives, so the oracle is the PLAIN semi join: a hash match
@@ -168,9 +168,9 @@ object AdvancedJoins extends QueryModule {
   private def q65(s: SparkSession, dir: String): DataFrame = {
     // the pruning set and ITS Bloom filter are index state of the
     // dimension subset (round 19, the judge's memo check): the filter
-    // build is a Spark ACTION, so un-memoized every serve paid a
-    // whole extra job's dispatch latency before the semi join it
-    // certifies even started. The pruned scan + exact semi join +
+    // build runs Spark ACTIONS (a count, then the aggregate), so
+    // un-memoized every serve paid two extra jobs' dispatch latency
+    // before the semi join it certifies even started. The pruned scan + exact semi join +
     // rollup remain serve work.
     val suppKeys = graft.CachedPlans.of(s, dir, "q65_supp_keys") {
       graft.operators.BloomPrune.normalizedKeys(

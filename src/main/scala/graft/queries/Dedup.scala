@@ -2052,10 +2052,10 @@ object Dedup extends QueryModule {
 
   // ---------------------------------------------------------------
   // q214 — HYPERLOGLOG registers over the shingle index, oracle-
-  // gated: the Flajolet et al. register scheme (functions/
-  // Sketches.HLL is the production FNV-hash Aggregator,
-  // SketchesSpec-verified) recomputed over a cross-engine hash so
-  // the SKETCH ITSELF is hash-gated, not just an estimate. The use
+  // gated: the Flajolet et al. register scheme (Spark's own
+  // `hll_sketch_agg` is the production sketch, SketchesSpec-checked)
+  // recomputed over a cross-engine hash so the SKETCH ITSELF is
+  // hash-gated, not just an estimate. The use
   // case is real: sizing the shingle/dedup index ("how many distinct
   // shingles does this corpus have") is the question a 100 TB run
   // sketches instead of paying COUNT(DISTINCT)'s every-key shuffle.

@@ -1396,8 +1396,8 @@ object TextAnalysis extends QueryModule {
 
   // ---------------------------------------------------------------
   // q215 — COUNT-MIN SKETCH counters, oracle-gated (the q214 HLL
-  // recipe on the frequency sketch; functions/Sketches.CMS is the
-  // production Aggregator, SketchesSpec-verified): a d=4 × w=16
+  // recipe on the frequency sketch; Spark's own `count_min_sketch`
+  // is the production sketch, SketchesSpec-checked): a d=4 × w=16
   // counter matrix over the token stream with md5-derived buckets
   // (row-salted: first hex char of md5(token||'#'||row)), so the
   // MATRIX is hash-gated cell for cell — counter sums are plain

@@ -165,7 +165,8 @@ object Jp2 {
   }
 
   /** Coefficient plane → samples for a `w`×`hgt` region decomposed
-    * `lvls` times, WITHOUT the DC level shift. Reversible path:
+    * `lvls` times, WITHOUT the DC level shift, written back into
+    * `coeffs` (every caller hands over a fresh plane). Reversible path:
     * inverse 5/3 DWT on the raw coefficients; irreversible path:
     * midpoint dequantization (E.1.1.2, r = 0.5) per subband then
     * inverse 9/7 DWT with round-to-nearest. The subband enumeration
@@ -196,7 +197,10 @@ object Jp2 {
           y += 1
         }
       }
-      Wavelet97.inverse2d(dq, w, hgt, lvls).map(v => math.rint(v).toInt)
+      Wavelet97.inverse2d(dq, w, hgt, lvls)
+      var i = 0
+      while (i < dq.length) { coeffs(i) = math.rint(dq(i)).toInt; i += 1 }
+      coeffs
     }
 
   /** The T.800 B.3 tile grid: tiles of XTsiz×YTsiz anchored at the
@@ -683,9 +687,12 @@ object Wavelet97 {
     a
   }
 
-  def inverse2d(coeffs: Array[Double], w: Int, h: Int, levels: Int): Array[Double] = {
-    require(coeffs.length == w * h)
-    val a = coeffs.clone()
+  /** Multi-level inverse 2-D, IN PLACE: `a` holds the Mallat-layout
+    * coefficients and comes back as the samples (returned for
+    * chaining). Callers pass a plane they own.
+    */
+  def inverse2d(a: Array[Double], w: Int, h: Int, levels: Int): Array[Double] = {
+    require(a.length == w * h)
     var regions = List.empty[(Int, Int)]
     var (cw, ch) = (w, h)
     var lev = 0
@@ -847,13 +854,14 @@ object Wavelet53 {
     a
   }
 
-  /** Multi-level inverse 2-D — exact inverse of [[forward2d]]. Each
-    * level lifts the columns, then the rows, of its region through one
-    * line buffer.
+  /** Multi-level inverse 2-D — exact inverse of [[forward2d]], IN
+    * PLACE: `a` holds the Mallat-layout coefficients and comes back as
+    * the samples (returned for chaining); callers pass a plane they
+    * own. Each level lifts the columns, then the rows, of its region
+    * through one line buffer.
     */
-  def inverse2d(coeffs: Array[Int], w: Int, h: Int, levels: Int): Array[Int] = {
-    require(coeffs.length == w * h, s"${coeffs.length} != $w x $h")
-    val a = coeffs.clone()
+  def inverse2d(a: Array[Int], w: Int, h: Int, levels: Int): Array[Int] = {
+    require(a.length == w * h, s"${a.length} != $w x $h")
     // Rebuild the REGION sizes forward transformed per level (LL_0 =
     // full image down to LL_{levels-1}), prepending as we descend so
     // the list ends up innermost-first — the order the inverse must

@@ -1,41 +1,32 @@
 package graft
 
-import graft.functions.Bloom
 import graft.operators.BloomPrune
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Bloom filter kernel + the pruned semi-join operator. */
+/** The Bloom-pruned semi join over Spark's own Bloom filter. */
 class BloomSpec extends AnyFunSuite with SharedSpark {
 
-  test("no false negatives, bounded false positives") {
+  test("built filter: false-positive rate on 100k non-members under 2x its target") {
+    import spark.implicits._
     val rnd = new scala.util.Random(7)
     val keys = Array.fill(10000)(rnd.nextLong())
-    val f = Bloom.empty(1 << 20, 5)
-    keys.foreach(f.add)
-    assert(keys.forall(f.contains)) // a Bloom filter can never miss
-    // FP rate at n=10k, m=2^20, k=5 is ~1e-7; 100k probes ≈ 0 hits,
-    // allow a generous margin
-    val fps = Iterator.fill(100000)(rnd.nextLong())
-      .count(x => !keys.contains(x) && f.contains(x))
-    assert(fps < 50, s"false-positive count $fps out of bound")
-  }
-
-  test("merge is word-wise OR: commutative and equals the union build") {
-    val a = Bloom.empty(1 << 10, 3); val b = Bloom.empty(1 << 10, 3)
-    val u = Bloom.empty(1 << 10, 3)
-    (1L to 100L).foreach { x => a.add(x); u.add(x) }
-    (101L to 200L).foreach { x => b.add(x); u.add(x) }
-    val merged = Bloom.empty(1 << 10, 3).mergeWith(a).mergeWith(b)
-    assert(merged.words.toSeq == u.words.toSeq)
-    val swapped = Bloom.empty(1 << 10, 3).mergeWith(b).mergeWith(a)
-    assert(swapped.words.toSeq == u.words.toSeq)
+    val members = keys.toSet
+    val filter = BloomPrune.buildFilter(keys.toSeq.toDF("k").repartition(4))
+    assert(keys.forall(filter.mightContainLong)) // a Bloom filter never misses
+    val probes = Iterator.continually(rnd.nextLong())
+      .filterNot(members.contains).take(100000)
+    val fps = probes.count(filter.mightContainLong)
+    assert(fps < 2 * BloomPrune.FalsePositiveRate * 100000,
+      s"$fps false positives in 100k probes")
   }
 
   test("prunedSemiJoin equals the plain semi join exactly") {
     import spark.implicits._
     val large = (1L to 5000L).map(i => (i, i % 97)).toDF("id", "key")
-    val small = Seq(3L, 11L, 42L, 90L).toDF("k")
+    // two partitions: the filter aggregate merges partial filters
+    val small = Seq(3L, 11L, 42L, 90L, 96L, 500L).toDF("k").repartition(2)
+    assert(small.rdd.getNumPartitions == 2)
     val pruned = BloomPrune.prunedSemiJoin(large, "key", small, "k")
       .orderBy("id").collect().map(_.getLong(0)).toSeq
     val plain = large.join(small, large("key") === small("k"), "left_semi")
@@ -47,8 +38,7 @@ class BloomSpec extends AnyFunSuite with SharedSpark {
     import spark.implicits._
     val large = (1L to 100L).map(i => (i, i % 7)).toDF("id", "key")
     // a NULL key and a non-castable string key (casts to NULL) must be
-    // dropped like the plain semi join drops them — not NPE in the
-    // primitive-Long aggregation
+    // dropped like the plain semi join drops them
     val small = Seq(Some("3"), None, Some("x")).toDF("k")
     val pruned = BloomPrune.prunedSemiJoin(large, "key", small, "k")
       .orderBy("id").collect().map(_.getLong(0)).toSeq
@@ -56,6 +46,9 @@ class BloomSpec extends AnyFunSuite with SharedSpark {
         large("key") === expr("try_cast(k AS BIGINT)"), "left_semi")
       .orderBy("id").collect().map(_.getLong(0)).toSeq
     assert(pruned == plain && pruned.nonEmpty)
+    // nothing castable on the small side: an empty filter, no rows
+    val none = Seq(Option.empty[String], Some("x")).toDF("k")
+    assert(BloomPrune.prunedSemiJoin(large, "key", none, "k").isEmpty)
   }
 
   test("the bloom membership filter sits before the join in the plan") {
@@ -70,10 +63,10 @@ class BloomSpec extends AnyFunSuite with SharedSpark {
     val small = Seq(1L, 5L).toDF("k")
     val plan = BloomPrune.prunedSemiJoin(large, "key", small, "k")
       .queryExecution.executedPlan.toString
-    assert(plan.contains("bloom_might_contain"), plan)
+    assert(plan.contains("might_contain"), plan)
     // the filter is a per-row predicate on the large side, feeding the
     // semi join — not applied after it
-    val filterIdx = plan.indexOf("bloom_might_contain")
+    val filterIdx = plan.indexOf("might_contain")
     val joinIdx = plan.indexOf("LeftSemi")
     assert(joinIdx >= 0 && filterIdx > joinIdx, plan) // child appears below/after parent in tree print
   }

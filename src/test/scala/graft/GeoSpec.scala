@@ -1,6 +1,7 @@
 package graft
 
-import graft.functions.{Geo, GeoFunctions}
+import graft.functions.{Geo, GeoFunctions, GeoKernel}
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Geometry kernel: golden values from the reference's own AOI
@@ -147,6 +148,20 @@ class GeoSpec extends AnyFunSuite with SharedSpark {
         assert(row.getSeq[String](0).size.toLong == row.getLong(2), s"$w @ $cs")
       }
     } finally spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+  }
+
+  test("grid cells at a saturated Int.MaxValue index: one loop emits " +
+      "each cell once") {
+    // every index of this envelope saturates to Int.MaxValue on x: a
+    // `cx <= cx2; cx += 1` loop would wrap past it and overrun
+    val wkt = UTF8String.fromString(
+      "POLYGON ((3e9 0, 3.5e9 0, 3.5e9 1.5, 3e9 1.5, 3e9 0))")
+    val cells = GeoKernel.gridCells(wkt, 1.0).array.map(_.toString).toSeq
+    assert(cells == Seq(s"${Int.MaxValue}:0", s"${Int.MaxValue}:1"))
+    assert(GeoKernel.cellCount(wkt, 1.0) == 2L)
+    val env = GeoKernel.envelope(wkt)
+    assert(GeoKernel.gridCellsEnv(env, 1.0).array.map(_.toString).toSeq == cells)
+    assert(GeoKernel.refCell(env, env, 1.0).toString == cells.head)
   }
 
   test("st_coverage_ratio = st_intersection_area / st_area, null when the second has no area") {

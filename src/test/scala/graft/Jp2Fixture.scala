@@ -287,16 +287,28 @@ object Jp2Fixture {
       varySteps: Boolean = false): Array[Byte] = {
     require(img.length == w * h)
     val shifted = img.map(v => (v - (1 << (bitDepth - 1))).toDouble)
+    val (q, exps) = quantize97(shifted, w, h, levels, bitDepth, varySteps)
+    val (packets, maxBps) = tier1Encode(q, w, h, levels, cbw, cbh)
+    assemble(w, h, levels, bitDepth, cbw, cbh, tileParts = 1,
+      sopEph = false, reversible = false, guard97(maxBps, exps), exps,
+      Some(Array.fill(exps.length)(0)), Seq(packets), mct = false)
+  }
+
+  /** Forward 9/7 of a DC-shifted plane, quantized per subband with
+    * Δ_b = 2^(R_b − ε_b) = 1 (ε_b = R_b); with varySteps, Δ_b
+    * alternates 1/2 BY QCD INDEX (ε_b = R_b − (qcdIdx mod 2)) so any
+    * decoder that dequantizes a subband with the wrong QCD slot
+    * halves/doubles its coefficients — an index misalignment becomes
+    * a loud error instead of a silent no-op. Returns the quantized
+    * plane and the per-subband exponents ε_b.
+    */
+  private def quantize97(shifted: Array[Double], w: Int, h: Int,
+      levels: Int, bitDepth: Int, varySteps: Boolean = false)
+      : (Array[Int], Array[Int]) = {
     val coeffs = Wavelet97.forward2d(shifted, w, h, levels)
-    // quantize per subband with Δ_b = 2^(R_b − ε_b) = 1 (ε_b = R_b);
-    // with varySteps, Δ_b alternates 1/2 BY QCD INDEX (ε_b = R_b −
-    // (qcdIdx mod 2)) so any decoder that dequantizes a subband with
-    // the wrong QCD slot halves/doubles its coefficients — an index
-    // misalignment becomes a loud error instead of a silent no-op
     val resolutions = Tier2.subbands(w, h, levels)
-    val nSb = resolutions.map(_.size).sum
     val gain = (b: Int) => if (b == 0) 0 else if (b == 3) 2 else 1
-    val exps = new Array[Int](nSb)
+    val exps = new Array[Int](resolutions.map(_.size).sum)
     val q = new Array[Int](w * h)
     for (res <- resolutions; sb <- res) {
       val shift = if (varySteps) sb.qcdIdx % 2 else 0
@@ -308,14 +320,16 @@ object Jp2Fixture {
           math.floor(math.abs(coeffs(i)) / delta)).toInt
       }
     }
-    val (packets, maxBps) = tier1Encode(q, w, h, levels, cbw, cbh)
-    // Mb = G + ε_b − 1 must cover every block's bit-planes
-    val guard = math.max(2,
-      (0 until nSb).map(b => maxBps(b) - exps(b) + 1).max)
+    (q, exps)
+  }
+
+  /** Guard bits for the 9/7 path: Mb = G + ε_b − 1 must cover every
+    * block's bit-planes.
+    */
+  private def guard97(maxBps: Array[Int], exps: Array[Int]): Int = {
+    val guard = math.max(2, exps.indices.map(b => maxBps(b) - exps(b) + 1).max)
     require(guard <= 7, s"guard bits $guard exceed the 3-bit field")
-    assemble(w, h, levels, bitDepth, cbw, cbh, tileParts = 1,
-      sopEph = false, reversible = false, guard, exps,
-      Some(Array.fill(nSb)(0)), Seq(packets), mct = false)
+    guard
   }
 
   private type Encoded =
@@ -352,9 +366,10 @@ object Jp2Fixture {
     * resolution-major, component-minor (LRCP, one layer, one
     * precinct — B.12.1.1).
     */
-  /** Encode a MULTI-TILE reversible codestream (round 13): the image
-    * is cut on a `tileW`×`tileH` grid (clipped at the edges) and each
-    * tile is DC-shifted, 5/3-transformed, and tier-1 coded
+  /** Encode a MULTI-TILE codestream: the image is cut on
+    * a `tileW`×`tileH` grid (clipped at the edges) and each tile is
+    * DC-shifted, transformed (reversible 5/3, or with `irreversible`
+    * the 9/7 + Δ = 1 quantization of [[encode97]]), and tier-1 coded
     * INDEPENDENTLY against its own geometry — T.800's per-tile
     * pipeline under the aligned profile the decoder supports (grid
     * offsets 0; the caller picks tile dims divisible by 2^levels).
@@ -366,8 +381,8 @@ object Jp2Fixture {
   def encodeTiledGrid(img: Array[Int], w: Int, h: Int, tileW: Int,
       tileH: Int, levels: Int, bitDepth: Int = 8, cbw: Int = 16,
       cbh: Int = 16, xOff: Int = 0, yOff: Int = 0,
-      xTOff: Int = 0, yTOff: Int = 0, sopEph: Boolean = false)
-      : Array[Byte] = {
+      xTOff: Int = 0, yTOff: Int = 0, sopEph: Boolean = false,
+      irreversible: Boolean = false): Array[Byte] = {
     require(img.length == w * h)
     require(tileW > 0 && tileH > 0)
     // A.5.1: grid origin at or before the image origin, first tile
@@ -392,15 +407,21 @@ object Jp2Fixture {
       val th = math.min(yEnd, yTOff + (ty + 1) * tileH) - cy0
       val px = Array.tabulate(tw * th)(i =>
         img((y0 + i / tw) * w + (x0 + i % tw)) - shift)
-      tier1Encode(Wavelet53.forward2d(px, tw, th, levels), tw, th,
-        levels, cbw, cbh)
+      if (irreversible) {
+        val (q, exps) = quantize97(px.map(_.toDouble), tw, th, levels,
+          bitDepth)
+        (tier1Encode(q, tw, th, levels, cbw, cbh), exps)
+      } else (tier1Encode(Wavelet53.forward2d(px, tw, th, levels), tw,
+        th, levels, cbw, cbh), Array.empty[Int])
     }
     // shared main-header QCD: per-subband max over every tile (tiles
-    // share the decomposition depth, so qcdIdx enumerations align)
-    val maxBps = tiles.map(_._2).transpose.map(_.max)
-    val exps = maxBps.map(b => math.max(1, b - guardBits + 1)).toArray
-    val mb = exps.map(_ + guardBits - 1)
-    val nSb = exps.length
+    // share the decomposition depth, so qcdIdx enumerations align,
+    // and the 9/7 exponents depend only on the subband)
+    val maxBps = tiles.map(_._1._2).transpose.map(_.max).toArray
+    val (guard, exps) =
+      if (irreversible) (guard97(maxBps, tiles.head._2), tiles.head._2)
+      else (guardBits, maxBps.map(b => math.max(1, b - guardBits + 1)))
+    val mb = exps.map(_ + guard - 1)
 
     val bos = new ByteArrayOutputStream()
     val d = new DataOutputStream(bos)
@@ -424,12 +445,10 @@ object Jp2Fixture {
     d.writeByte(Tier2.floorLog2(cbw) - 2)
     d.writeByte(Tier2.floorLog2(cbh) - 2)
     d.writeByte(0) // default code-block style
-    d.writeByte(1) // reversible 5/3
-    d.writeShort(0xFF5C) // QCD style 0
-    d.writeShort(3 + nSb)
-    d.writeByte(guardBits << 5)
-    exps.foreach(e => d.writeByte(e << 3))
-    for ((tile, ti) <- tiles.zipWithIndex) {
+    d.writeByte(if (irreversible) 0 else 1) // transform: 9/7 or 5/3
+    writeQcd(d, guard, exps,
+      if (irreversible) Some(Array.fill(exps.length)(0)) else None)
+    for (((tile, _), ti) <- tiles.zipWithIndex) {
       val body = new ByteArrayOutputStream()
       buildTilePackets(Seq(tile._1), cbw, cbh, mb, sopEph = sopEph,
         progression = 0).foreach(body.write)
@@ -510,12 +529,29 @@ object Jp2Fixture {
     packetBytes.result()
   }
 
+  /** QCD marker: style 0 (no quantization, 8-bit SPqcd) without
+    * mantissas, style 2 (scalar expounded, 16-bit SPqcd) with them.
+    */
+  private def writeQcd(d: DataOutputStream, guard: Int, exps: Array[Int],
+      mants: Option[Array[Int]]): Unit = {
+    d.writeShort(0xFF5C) // QCD
+    mants match {
+      case None =>
+        d.writeShort(3 + exps.length)
+        d.writeByte(guard << 5)
+        exps.foreach(e => d.writeByte(e << 3))
+      case Some(mu) =>
+        d.writeShort(3 + 2 * exps.length)
+        d.writeByte((guard << 5) | 2)
+        exps.zip(mu).foreach { case (e, m) => d.writeShort((e << 11) | m) }
+    }
+  }
+
   private def assemble(w: Int, h: Int, levels: Int, bitDepth: Int,
       cbw: Int, cbh: Int, tileParts: Int, sopEph: Boolean,
       reversible: Boolean, guard: Int, exps: Array[Int],
       mants: Option[Array[Int]], compPackets: Seq[Encoded],
       mct: Boolean, progression: Int = 0): Array[Byte] = {
-    val nSb = exps.length
     val mb = exps.map(_ + guard - 1)
     val nComp = compPackets.size
     // distribute whole packets round-robin-contiguously over the
@@ -561,17 +597,7 @@ object Jp2Fixture {
     d.writeByte(Tier2.floorLog2(cbh) - 2)
     d.writeByte(0) // default code-block style
     d.writeByte(if (reversible) 1 else 0) // transform: 5/3 or 9/7
-    d.writeShort(0xFF5C) // QCD
-    mants match {
-      case None => // style 0: no quantization, 8-bit SPqcd
-        d.writeShort(3 + nSb)
-        d.writeByte(guard << 5)
-        exps.foreach(e => d.writeByte(e << 3))
-      case Some(mu) => // style 2: scalar expounded, 16-bit SPqcd
-        d.writeShort(3 + 2 * nSb)
-        d.writeByte((guard << 5) | 2)
-        exps.zip(mu).foreach { case (e, m) => d.writeShort((e << 11) | m) }
-    }
+    writeQcd(d, guard, exps, mants)
     for ((partData, pi) <- perPart.zipWithIndex) {
       d.writeShort(0xFF90) // SOT
       d.writeShort(10)

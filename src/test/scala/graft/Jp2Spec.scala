@@ -525,6 +525,40 @@ class Jp2Spec extends AnyFunSuite {
     }
   }
 
+  test("multi-tile 9/7 decode: each tile dequantizes against its own " +
+      "layout, full and overview reads within the quantization bound") {
+    val rng = new Random(71)
+    val (w, h, levels, depth) = (72, 56, 3, 8) // clipped 8- and 24-wide edges
+    val (tileW, tileH) = (32, 32)              // divisible by 2^3
+    val img = Array.fill(w * h)(rng.nextInt(1 << depth))
+    val bytes = graft.Jp2Fixture.encodeTiledGrid(img, w, h, tileW, tileH,
+      levels, bitDepth = depth, irreversible = true)
+    val hdr = Jp2.parseHeader(bytes)
+    assert(!hdr.reversible && hdr.tileParts.map(_.tileIndex).distinct.size == 6)
+    // the single-tile 9/7 bounds: Δ = 1 midpoint quantization through
+    // the synthesis gain
+    val (_, px) = Jp2.decode(bytes)
+    val errs = img.zip(px).map { case (a, b) => math.abs(a - b) }
+    assert(errs.max <= 8, s"max error ${errs.max}")
+    assert(errs.sum.toDouble / errs.length <= 1.5, "mean error")
+    // overview read, d = 1: per-tile truth is the UNQUANTIZED LL_1 of
+    // each DC-shifted tile, placed at the halved tile origin
+    val shift = 1 << (depth - 1)
+    val (_, wr, hr, red) = Jp2.decodeReduced(bytes, 1)
+    assert((wr, hr) == ((w + 1) / 2, (h + 1) / 2))
+    val truth = new Array[Double](wr * hr)
+    for (y0 <- 0 until h by tileH; x0 <- 0 until w by tileW) {
+      val (tw, th) = (math.min(tileW, w - x0), math.min(tileH, h - y0))
+      val fwd = graft.sources.Wavelet97.forward2d(Array.tabulate(tw * th)(i =>
+        (img((y0 + i / tw) * w + (x0 + i % tw)) - shift).toDouble), tw, th, 1)
+      for (y <- 0 until (th + 1) / 2; x <- 0 until (tw + 1) / 2)
+        truth(((y0 >> 1) + y) * wr + ((x0 >> 1) + x)) = fwd(y * tw + x) + shift
+    }
+    val rerrs = red.zip(truth).map { case (a, t) => math.abs(a - t) }
+    assert(rerrs.max <= 16, s"discard 1: max error ${rerrs.max}")
+    assert(rerrs.sum / rerrs.length <= 3.0, "discard 1: mean error")
+  }
+
   test("multi-tile decode: seeded property sweep — random aligned " +
       "grids, dims, depths, and content all round-trip bit-exactly") {
     val rng = new Random(79)

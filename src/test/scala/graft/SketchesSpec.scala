@@ -1,12 +1,13 @@
 package graft
 
 import graft.functions.Sketches
-import graft.functions.Sketches.CountMinAggregator
+import org.apache.spark.sql.functions._
+import org.apache.spark.util.sketch.CountMinSketch
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Count-Min sketch Aggregator: upper-bound property, exactness
-  * without collisions, merge-order invariance, and the distributed
-  * path through Spark.
+/** Spark's built-in sketches hold the guarantees the engine relies
+  * on, and the Misra-Gries Aggregator (the one sketch kept in
+  * [[graft.functions.Sketches]]) holds its deterministic bound.
   */
 class SketchesSpec extends AnyFunSuite with SharedSpark {
 
@@ -16,127 +17,51 @@ class SketchesSpec extends AnyFunSuite with SharedSpark {
   private val exact: Map[String, Long] =
     corpus.groupBy(identity).view.mapValues(_.size.toLong).toMap
 
-  test("estimates are upper bounds and exact at low collision rates") {
-    val cms = corpus.foldLeft(Sketches.empty(4, 2048))((s, t) => s.add(t))
-    exact.foreach { case (t, n) =>
-      val est = cms.estimate(t)
-      assert(est >= n)
-      assert(est == n) // 50 keys in 4x2048 cells: collisions ~impossible
-    }
-    assert(cms.estimate("never-seen") == 0L)
-  }
-
-  test("narrow sketch still upper-bounds under heavy collisions") {
-    val cms = corpus.foldLeft(Sketches.empty(4, 16))((s, t) => s.add(t))
-    exact.foreach { case (t, n) => assert(cms.estimate(t) >= n) }
-  }
-
-  test("merge is order-invariant (any partitioning gives the same sketch)") {
-    val parts = corpus.grouped(300).toSeq
-    val sketches = parts.map(_.foldLeft(Sketches.empty(4, 512))((s, t) => s.add(t)))
-    val fwd = sketches.reduceLeft((a, b) =>
-      a.copy(counts = a.counts.clone()).mergeWith(b))
-    val rev = sketches.reverse.reduceLeft((a, b) =>
-      a.copy(counts = a.counts.clone()).mergeWith(b))
-    assert(fwd.counts.toSeq == rev.counts.toSeq)
-    assert(exact.forall { case (t, n) => fwd.estimate(t) >= n })
-  }
-
-  test("distributed aggregation through Spark matches local build") {
+  test("count_min_sketch never under-counts, even under heavy collisions") {
     import spark.implicits._
-    val local = corpus.foldLeft(Sketches.empty(4, 512))((s, t) => s.add(t))
-    val ds = spark.createDataset(corpus).repartition(8)
-    val dist = ds.select(new CountMinAggregator(4, 512).toColumn).head()
-    assert(dist.counts.toSeq == local.counts.toSeq)
+    // eps 0.05 → width 40 < 50 distinct tokens: collisions are certain
+    def sketch(parts: Int): CountMinSketch = CountMinSketch.readFrom(
+      spark.createDataset(corpus).repartition(parts)
+        .select(count_min_sketch(col("value"), lit(0.05), lit(0.9), lit(17)))
+        .as[Array[Byte]].head())
+    val cms = sketch(8)
+    assert(cms.totalCount == corpus.size)
+    exact.foreach { case (t, n) =>
+      assert(cms.estimateCount(t) >= n, s"$t under-counted")
+    }
+    assert(exact.exists { case (t, n) => cms.estimateCount(t) > n })
+    // the merge is cell-wise addition: any partitioning, same sketch
+    assert(sketch(1).equals(cms))
   }
 
-  // ---- HyperLogLog ----------------------------------------------
-
-  test("HLL estimates distinct counts within a few percent") {
+  test("hll_sketch_estimate: error in bound, equal across a repartition") {
+    import spark.implicits._
     val n = 20000
     val tokens = (0 until n).map(i => s"item-$i")
-    val hll = tokens.foldLeft(Sketches.emptyHll(12))((s, t) => s.add(t))
-    val est = hll.estimate
+    def estimate(ds: org.apache.spark.sql.Dataset[String]): Double =
+      ds.select(hll_sketch_estimate(hll_sketch_agg(col("value"), 12)))
+        .as[Long].head().toDouble
+    // duplicates do not move a distinct count
+    val est = estimate(spark.createDataset(tokens ++ tokens).repartition(16))
+    // lgConfigK 12: relative standard error 1.04/√4096 ≈ 1.6 %
     assert(math.abs(est - n) / n < 0.05, s"estimate $est for $n")
-    // duplicates don't move the estimate (idempotent add)
-    val hll2 = (tokens ++ tokens ++ tokens)
-      .foldLeft(Sketches.emptyHll(12))((s, t) => s.add(t))
-    assert(hll2.estimate == est)
-    // small range uses linear counting: near-exact
-    val small = (0 until 30).map(i => s"s$i")
-      .foldLeft(Sketches.emptyHll(12))((s, t) => s.add(t))
-    assert(math.abs(small.estimate - 30) < 1.0)
+    assert(estimate(spark.createDataset(tokens).repartition(3)) == est)
   }
 
-  test("HLL merge is order- and partitioning-invariant") {
-    val tokens = (0 until 5000).map(i => s"item-$i")
-    val whole = tokens.foldLeft(Sketches.emptyHll(10))((s, t) => s.add(t))
-    val parts = tokens.grouped(700).map(
-      _.foldLeft(Sketches.emptyHll(10))((s, t) => s.add(t))).toSeq
-    val mergedFwd = parts.map(p => Sketches.HLL(p.p, p.registers.clone()))
-      .reduceLeft(_.mergeWith(_))
-    val mergedRev = parts.reverse.map(p => Sketches.HLL(p.p, p.registers.clone()))
-      .reduceLeft(_.mergeWith(_))
-    assert(mergedFwd.registers.toSeq == whole.registers.toSeq)
-    assert(mergedRev.registers.toSeq == whole.registers.toSeq)
-  }
-
-  test("distributed HLL over Spark matches the local sketch") {
+  test("percentile_approx keeps its rank error within 1/accuracy") {
     import spark.implicits._
-    val tokens = (0 until 8000).map(i => s"item-${i % 3000}") // 3000 distinct
-    val local = tokens.foldLeft(Sketches.emptyHll(12))((s, t) => s.add(t))
-    val dist = spark.createDataset(tokens).repartition(16)
-      .select(new Sketches.HllAggregator(12).toColumn).head()
-    assert(dist.registers.toSeq == local.registers.toSeq)
-    assert(math.abs(dist.estimate - 3000) / 3000 < 0.05)
-  }
-
-  test("quantile sketch: bounded rank error on shuffled input") {
-    val rnd = new scala.util.Random(11)
     val n = 50000
-    val xs = rnd.shuffle((1 to n).map(_.toDouble).toVector)
-    val sk = xs.foldLeft(Sketches.emptyQuantile(256))(_.add(_))
-    assert(sk.n == n)
+    val xs = new scala.util.Random(11).shuffle((1 to n).map(_.toDouble))
+    val qs = Seq(0.01, 0.25, 0.5, 0.75, 0.95, 0.99)
+    val accuracy = 256
+    val est = spark.createDataset(xs).repartition(8)
+      .select(percentile_approx(col("value"), lit(qs.toArray), lit(accuracy)))
+      .as[Array[Double]].head()
     // values ARE their own ranks here, so the estimate's rank error is
-    // |estimate - q*n|; the compactor bound at k=256 is well under 2%
-    Seq(0.01, 0.25, 0.5, 0.75, 0.95, 0.99).foreach { q =>
-      val est = sk.quantile(q)
-      assert(math.abs(est - q * n) <= 0.02 * n,
-        s"q=$q est=$est true=${q * n}")
-    }
-  }
-
-  test("quantile sketch merge stays within bound in any merge order") {
-    val rnd = new scala.util.Random(23)
-    val n = 40000
-    val xs = rnd.shuffle((1 to n).map(_.toDouble).toVector)
-    val parts = xs.grouped(7001)
-      .map(_.foldLeft(Sketches.emptyQuantile(256))(_.add(_))).toSeq
-    val fwd = parts.reduceLeft(_.mergeWith(_))
-    val rev = parts.reverse.reduceLeft(_.mergeWith(_))
-    Seq(fwd, rev).foreach { m =>
-      assert(m.n == n)
-      Seq(0.1, 0.5, 0.9).foreach { q =>
-        assert(math.abs(m.quantile(q) - q * n) <= 0.03 * n,
-          s"q=$q est=${m.quantile(q)}")
-      }
-    }
-  }
-
-  test("distributed quantile sketch over Spark: doc-length p50/p95") {
-    import spark.implicits._
-    val lens = Tables.documents(spark, "/root/testdata/sf0.001")
-      .select(org.apache.spark.sql.functions.expr(
-        "CAST(length(text) AS DOUBLE)").as("len")).as[Double]
-    val sk = lens.repartition(8)
-      .select(new Sketches.QuantileAggregator(256).toColumn).head()
-    val exact = lens.collect().sorted
-    val n = exact.length
-    Seq(0.5, 0.95).foreach { q =>
-      val est = sk.quantile(q)
-      val estRank = exact.count(_ <= est)
-      assert(math.abs(estRank - q * n) <= math.max(0.05 * n, 3.0),
-        s"q=$q est=$est rank=$estRank n=$n")
+    // |estimate - q*n|
+    qs.zip(est).foreach { case (q, e) =>
+      assert(math.abs(e - q * n) <= n.toDouble / accuracy + 1,
+        s"q=$q est=$e true=${q * n}")
     }
   }
 

@@ -74,7 +74,7 @@ class SpatialJoinRuleSpec extends AnyFunSuite with SharedSpark {
     import spark.implicits._
     // envelope 30000×30000 at pitch 1.0 → 9·10⁸ cells: exploding it
     // would trip st_grid_cells' hard cap (and, pre-guard, allocate
-    // gigabytes). The maxCellsPerRow split must keep it un-exploded.
+    // gigabytes). The MaxCellsPerRow split must keep it un-exploded.
     val wide = Seq(("lBIG",
       "POLYGON ((-15000 -15000, 15000 -15000, 15000 15000, " +
         "-15000 15000, -15000 -15000))")).toDF("l_id", "l_geom")

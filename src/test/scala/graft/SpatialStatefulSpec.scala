@@ -59,6 +59,20 @@ class SpatialStatefulSpec extends AnyFunSuite with SharedSpark {
     assert(gridded == brute)
   }
 
+  test("grid join past the Int cell range joins each pair exactly once") {
+    import spark.implicits._
+    // both envelopes lie below -2^31 * cellSize: every cell index
+    // saturates to Int.MinValue, and the reference cell must saturate
+    // with them (an ANSI Cast(Long -> Int) of it throws CAST_OVERFLOW)
+    val x = -3.0e9
+    val left = Seq(box("l1", x, 0.0, x + 2.0, 2.0)).toDF("lid", "lg")
+    val right = Seq(box("r1", x + 1.0, 1.0, x + 3.0, 3.0)).toDF("rid", "rg")
+    val got = SpatialJoin.intersectJoin(spark, left, right, "lg", "rg", 1.0)
+      .select("lid", "rid").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(got == Seq(("l1", "r1")))
+  }
+
   test("flatMapGroupsWithState sessionizer: gaps close sessions, state sums") {
     implicit val s = spark
     import s.implicits._
